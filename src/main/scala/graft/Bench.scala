@@ -133,7 +133,8 @@ object Bench {
     * per-run — sized to survive the driver's ~2 KB stdout-tail capture
     * (round 10's artifact was truncated mid-`runs` and lost the
     * medians). `detail` additionally carries the per-run times
-    * ("runs") and per-run external load ("run_xload"); main() writes
+    * ("runs"), per-run external load ("run_xload") and per-run codegen
+    * compilations ("codegen_compilations"); main() writes
     * it to a repo file (BENCH_DETAIL.json) committed alongside. */
   def benchLines(spark: SparkSession, sfDir: String,
                  queries: Seq[(String, (SparkSession, String) =>
@@ -141,11 +142,21 @@ object Bench {
                  extraFields: String = ""): (String, String) = {
     val loadBefore = loadAvg()
     SelfLoad.start()
-    // (wall secs, 1-min loadavg at end, self EWMA cores at end, err)
+    // per-query codegen compilations of each headline run, in run
+    // order: a count that repeats exactly between runs, beside the
+    // wall times (JVM-wide, so it is read around one query at a time)
+    val compiles = scala.collection.mutable.LinkedHashMap[String,
+      scala.collection.mutable.ArrayBuffer[Long]]()
+    def compilations: Long =
+      org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME.getCount
+    // (wall secs, 1-min loadavg at end, self EWMA cores at end, err,
+    // codegen compilations)
     def timedRun(fn: (SparkSession, String) =>
         org.apache.spark.sql.DataFrame)
-        : (Double, Double, Double, Option[String]) = {
+        : (Double, Double, Double, Option[String], Long) = {
       spark.catalog.clearCache()
+      val c0 = compilations
       val t0 = System.nanoTime()
       val err =
         try { fn(spark, sfDir).collect(); None }
@@ -154,7 +165,8 @@ object Bench {
             Option(t.getMessage).getOrElse("").take(300))
         }
       val wall = (System.nanoTime() - t0) / 1e9
-      (wall, loadAvg().headOption.getOrElse(0.0), SelfLoad.ewma, err)
+      (wall, loadAvg().headOption.getOrElse(0.0), SelfLoad.ewma, err,
+        compilations - c0)
     }
     // MID-RUN RE-GATE (r13: the start gate passed at 1.77, then the
     // box drifted to 3.7+ and 19 queries read ~1.1× dirty — the gate
@@ -182,9 +194,11 @@ object Bench {
         val times = Seq.newBuilder[(Double, Double, Double)]
         var run = 0
         while (run < 3 && err.isEmpty) {
-          val (t, la, sc, e) = timedRun(fn)
+          val (t, la, sc, e, nc) = timedRun(fn)
           err = e
           times += ((t, la, sc))
+          compiles.getOrElseUpdate(name,
+            scala.collection.mutable.ArrayBuffer[Long]()) += nc
           run += 1
         }
         val ts = times.result()
@@ -216,7 +230,7 @@ object Bench {
             case (n, ts, None) if ts.nonEmpty => n -> ts.map(_._1).min
           }.toMap
           dirtyQs.map { name =>
-            val (t, la, sc, _) = timedRun(byName(name))
+            val (t, la, sc, _, _) = timedRun(byName(name))
             val x = math.max(0.0, la - sc)
             // A "clean" twin SLOWER than its dirty headline, or whose
             // post-run load spiked, was itself contaminated — the 1-min
@@ -229,7 +243,7 @@ object Bench {
                 x >= CleanPassGate) {
               val (laQ2, _) = awaitQuietBox(CleanPassGate, maxWaitSecs = 120)
               if (laQ2 < CleanPassGate) {
-                val (t2, la2, sc2, _) = timedRun(byName(name))
+                val (t2, la2, sc2, _, _) = timedRun(byName(name))
                 val x2 = math.max(0.0, la2 - sc2)
                 if (t2 < t) (name, t2, x2) else (name, t, x)
               } else (name, t, x)
@@ -252,6 +266,9 @@ object Bench {
       "\"" + k + "\":" + ts.map(t => sec(external(t)))
         .mkString("[", ",", "]") }
       .mkString("{", ",", "}")
+    val compileField = compiles.map { case (k, ns) =>
+      "\"" + k + "\":" + ns.mkString("[", ",", "]") }
+      .mkString(",\"codegen_compilations\":{", ",", "}")
     val cleanField =
       if (cleanRuns.isEmpty) ""
       else cleanRuns.map { case (k, t, x) =>
@@ -276,7 +293,7 @@ object Bench {
       if (compactFull.length <= 1900) compactFull
       else s"""{"metric":"total","value":${sec(total)},"unit":"sec","queries":$qs,"loadavg":$load$midrun$extraFields$errField,"sf":"$sfDir"}"""
     val detail =
-      s"""{"metric":"total","value":${sec(total)},"unit":"sec","queries":$qs,"runs":$runs,"run_xload":$runLoad$cleanField,"loadavg":$load$midrun$extraFields$errField,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${sec(total)},"unit":"sec","queries":$qs,"runs":$runs,"run_xload":$runLoad$compileField$cleanField,"loadavg":$load$midrun$extraFields$errField,"sf":"$sfDir"}"""
     (compact, detail)
   }
 
@@ -289,7 +306,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val gate = sys.env.getOrElse("SPARK_GRAFT_LOAD_GATE", "2.0").toDouble
     val maxWait = sys.env.getOrElse("SPARK_GRAFT_LOAD_WAIT_SECS", "600").toInt
     val (laAtGate, waited) = awaitQuietBox(gate, maxWait)
@@ -298,16 +315,7 @@ object Bench {
         "\"load_at_gate\":%.2f,\"load_dirty\":%b",
       Double.box(gate), Int.box(waited), Double.box(laAtGate),
       Boolean.box(laAtGate >= gate))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "512")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     val (compact, detail) = benchLines(spark, sfDir,
       SparkEntry.benchQueries.map(n => n -> SparkEntry.queries(n)), extra)
     // full per-run detail goes to a repo file (committed alongside the

@@ -413,6 +413,7 @@ object Ivm {
   private[graft] def commitZDelta(spark: SparkSession, dir: String,
                                   s: StagedZ): (Int, Int) = {
     val (zv, vv) = Par.par2(
+      "z-set commit",
       MergeTable.mergeResolved(spark, zsetDir(dir),
         s.changed.filter(col(Mult) =!= 0),
         s.changed.filter(col(Mult) === 0).select(s.cols.map(col): _*),
@@ -428,6 +429,7 @@ object Ivm {
       // stats job (the view's upsert∪delete key set is exactly tg,
       // whose per-bucket distinct-group counts vStats carries) —
       // without them mergeResolved runs its own collect job
+      "view commit",
       MergeTable.mergeResolved(spark, viewDir(dir),
         s.recomputed, s.vDels, preStats = s.vStats))
     syncMarker(spark, dir, zv, vv)

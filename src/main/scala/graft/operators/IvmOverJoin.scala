@@ -259,15 +259,10 @@ object IvmOverJoin {
       // the pre-commit reads stay exact (see JoinIvm).
       def stageInner(sidesStaged: Option[(JoinIvm.StagedFold,
           JoinIvm.StagedFold)]): Ivm.StagedZ = {
-        // stats transfer (r15, see JoinIvm.stageView): both side z-sets
-        // bucket by spec.joinCols with the same nBuckets, so one side's
-        // staged touched-bucket set is the other's — re-checked on
-        // nBuckets and join-column types; saves the two touched-bucket
-        // collect jobs per staging
+        // stats transfer ([[JoinIvm.statsTransfer]]): saves the two
+        // touched-bucket collect jobs per staging
         val transfer = sidesStaged.isDefined &&
-          fMeta.nBuckets == dMeta.nBuckets &&
-          spec.joinCols.forall(c =>
-            fMeta.schema(c).dataType == dMeta.schema(c).dataType)
+          JoinIvm.statsTransfer(fMeta, dMeta, spec.joinCols)
         val dimOldForDF =
           if (transfer)
             MergeTable.readForKeysPre(spark, dimzDir(dir), dv0,
@@ -315,13 +310,18 @@ object IvmOverJoin {
           var nzD: Option[JoinIvm.StagedFold] = None
           try {
             Par.par2(
+              "fact z-set stage",
               { nzF = Some(JoinIvm.stageFold(spark, factzDir(dir),
                   "fact z-set", fCols, dF, nullCols(fCols))) },
+              "dim z-set stage",
               { nzD = Some(JoinIvm.stageFold(spark, dimzDir(dir),
                   "dim z-set", dCols, dD, nullCols(dCols))) })
             Par.par3(
+              "fact z-set commit",
               JoinIvm.commitFold(spark, factzDir(dir), fCols, nzF.get),
+              "dim z-set commit",
               JoinIvm.commitFold(spark, dimzDir(dir), dCols, nzD.get),
+              "inner view stage",
               { stagedZ = Some(stageInner(Some((nzF.get, nzD.get)))) })
           } finally {
             nzF.foreach(_.release())

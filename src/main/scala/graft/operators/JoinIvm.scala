@@ -149,6 +149,22 @@ object JoinIvm {
           sum(when(col(c).isNotNull, col("__jm")).otherwise(lit(0L)))
             .cast(LongType).as(s"__cntnn_$c"))): _*)
 
+  /** STATS TRANSFER guard (r15, guide §1.2): a delta's touched-bucket
+    * set computed against ONE side z-set is the other side's too
+    * exactly when both bucket by the join columns, in order, with the
+    * same nBuckets and the same join-column types (xxhash64 of an int
+    * and a long differ). `create` pins all of it; this re-checks every
+    * invariant the shortcut depends on, and on any mismatch the caller
+    * falls back to per-side touched-bucket reads. Shared with
+    * [[IvmOverJoin]]. */
+  private[graft] def statsTransfer(fMeta: MergeTable.Meta,
+                                   dMeta: MergeTable.Meta,
+                                   joinCols: Seq[String]): Boolean =
+    fMeta.nBuckets == dMeta.nBuckets &&
+      fMeta.bucketCols == joinCols && dMeta.bucketCols == joinCols &&
+      joinCols.forall(c =>
+        fMeta.schema(c).dataType == dMeta.schema(c).dataType)
+
   /** Create the empty maintained join view. Side projections are
     * inferred from the spec: each side's z-set carries the join cols
     * plus the group/aggregate cols found in ITS schema. */
@@ -451,16 +467,10 @@ object JoinIvm {
       val vd0 = viewDir(dir)
       def stageView(sidesStaged: Option[(StagedFold, StagedFold)])
           : (DataFrame, Map[Int, Long], Int) = {
-        // STATS TRANSFER (r15, guide §1.2): both side z-sets bucket by
-        // spec.joinCols with the same nBuckets (create pins it), so a
-        // delta's touched-bucket set computed against ONE side is the
-        // other side's too — re-checked here on nBuckets AND the join
-        // columns' types (xxhash64 of an int and a long differ). Saves
-        // the two touched-bucket collect jobs per staging.
+        // stats transfer ([[statsTransfer]]): saves the two
+        // touched-bucket collect jobs per staging
         val transfer = sidesStaged.isDefined &&
-          fMeta.nBuckets == dMeta.nBuckets &&
-          spec.joinCols.forall(c =>
-            fMeta.schema(c).dataType == dMeta.schema(c).dataType)
+          statsTransfer(fMeta, dMeta, spec.joinCols)
         val dimOldForDF =
           if (transfer)
             MergeTable.readForKeysPre(spark, dimzDir(dir), dv0,
@@ -560,13 +570,18 @@ object JoinIvm {
         var nzD: Option[StagedFold] = None
         try {
           Par.par2(
+            "fact z-set stage",
             { nzF = Some(stageFold(spark, factzDir(dir), "fact z-set",
                 fCols, dF, nullCols(fCols))) },
+            "dim z-set stage",
             { nzD = Some(stageFold(spark, dimzDir(dir), "dim z-set",
                 dCols, dD, nullCols(dCols))) })
           Par.par3(
+            "fact z-set commit",
             commitFold(spark, factzDir(dir), fCols, nzF.get),
+            "dim z-set commit",
             commitFold(spark, dimzDir(dir), dCols, nzD.get),
+            "view stage",
             { stagedV = Some(stageView(Some((nzF.get, nzD.get)))) })
         } finally {
           nzF.foreach(_.release())

@@ -110,10 +110,13 @@ object Retrieval {
                        nProbe: Int = 4,
                        rrfK: Int = 60, scale: Long = 1000000L): DataFrame = {
     require(kInner > 0 && k > 0, "kInner and k must be > 0")
+    // one pinned version is priced AND probed, so the batch is priced
+    // once: topKAt runs with the gate already applied here
+    val termV = TermIndex.latestVersion(spark, termIdxDir)
     val gated =
       if (termCfg.maxCandidateFraction.isPosInfinity) None
       else {
-        val cost = TermIndex.estimateProbeCost(spark, termIdxDir,
+        val cost = TermIndex.estimateProbeCostAt(spark, termIdxDir, termV,
           probesText, id, text, termCfg, terms)
         if (cost.candidateFraction > termCfg.maxCandidateFraction)
           Some(cost)
@@ -127,8 +130,10 @@ object Retrieval {
         probesText.limit(0).select(lit(0L).as("probe_id"),
           lit(0L).as("doc_id"), lit(0L).as("__rt"))
       case None =>
-        TermIndex.topK(spark, termIdxDir, probesText, id, text,
-            kInner, termCfg, terms)
+        TermIndex.topKAt(spark, termIdxDir, termV, probesText, id, text,
+            kInner,
+            termCfg.copy(maxCandidateFraction = TermIndex.ExactUnbounded),
+            terms)
           .select(col("probe_id"), col("doc_id"), col("rank").as("__rt"))
     }
     val dn = IvfIndex.topK(spark, ivfIdxDir, probesEmb, id, vec, kInner,

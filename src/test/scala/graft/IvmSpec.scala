@@ -822,6 +822,81 @@ class IvmSpec extends AnyFunSuite {
         "derivation")
   }
 
+  test("join-ivm + ivm-over-join: a side z-set not bucketed by the join " +
+      "columns fails the stats-transfer guard and the refresh stays exact") {
+    // The transfer reuses one side's touched-bucket set for the other
+    // side's read; that is only sound when BOTH sides bucket by the
+    // join columns (a, b). Re-create the fact z-set bucketed by `a`
+    // alone (same schema, keys and nBuckets), then run a two-sided
+    // batch whose ΔF joins old dim rows and whose ΔD joins old fact
+    // rows: a transferred bucket set would miss them.
+    def fDf(rows: Seq[(Long, Long, Long)]): DataFrame = rows.toDF("a", "b", "v")
+    def dDf(rows: Seq[(Long, Long, String, Option[Long])]): DataFrame =
+      rows.toDF("a", "b", "seg", "w")
+    val joinCols = Seq("a", "b")
+    def misBucketFact(dir: String): Unit = {
+      val (fz, dz) = (s"$dir/factz", s"$dir/dimz")
+      assert(JoinIvm.statsTransfer(MergeTable.readMeta(spark, fz),
+        MergeTable.readMeta(spark, dz), joinCols), "create pins the transfer")
+      val m = MergeTable.readMeta(spark, fz)
+      graft.operators.VersionedLayout.fs(spark, fz)
+        .delete(new org.apache.hadoop.fs.Path(fz), true)
+      MergeTable.create(spark, fz, m.schema, m.keyCols, Seq("a"), m.nBuckets)
+      assert(!JoinIvm.statsTransfer(MergeTable.readMeta(spark, fz),
+        MergeTable.readMeta(spark, dz), joinCols),
+        "a fact side bucketed by a alone must fail the guard")
+    }
+    val keys = for (a <- 1L to 4L; b <- 1L to 3L) yield (a, b)
+    val f0 = keys.map { case (a, b) => (a, b, a * 100 + b * 10) }
+    val d0 = keys.map { case (a, b) => (a, b, s"s${(a + b) % 3}", Option(a)) }
+    val fIns = keys.map { case (a, b) => (a, b, 1000 + a * 10 + b) }
+    val dOld = d0.take(4)
+    val dNew = dOld.map { case (a, b, _, w) => (a, b, "t", w) }
+    val f1 = f0 ++ fIns
+    val d1 = dNew ++ d0.drop(4)
+    def joined(fact: Seq[(Long, Long, Long)],
+               dim: Seq[(Long, Long, String, Option[Long])]) =
+      for { (a, b, v) <- fact; (a2, b2, s, w) <- dim if a == a2 && b == b2 }
+        yield (s, v, w)
+
+    val jDir = tmp("graft_jivm_misbucket")
+    val jSpec = JoinIvm.Spec(joinCols, Seq("seg"),
+      Seq(Ivm.Count("cnt"), Ivm.Sum("v", "sum_v")))
+    JoinIvm.create(spark, jDir, fDf(f0).schema, dDf(d0).schema, jSpec,
+      nBuckets = 16)
+    misBucketFact(jDir)
+    def jModel(fact: Seq[(Long, Long, Long)],
+               dim: Seq[(Long, Long, String, Option[Long])]): Set[Row] =
+      joined(fact, dim).groupBy(_._1).map { case (s, rs) =>
+        Row(s, rs.size.toLong, rs.map(_._2).sum) }.toSet
+    JoinIvm.applyDelta(spark, jDir, fDf(f0), fDf(Seq.empty), dDf(d0),
+      dDf(Seq.empty))
+    assert(JoinIvm.readView(spark, jDir).collect().toSet == jModel(f0, d0))
+    JoinIvm.applyDelta(spark, jDir, fDf(fIns), fDf(Seq.empty), dDf(dNew),
+      dDf(dOld))
+    assert(JoinIvm.readView(spark, jDir).collect().toSet == jModel(f1, d1))
+
+    val oDir = tmp("graft_ovj_misbucket")
+    val oSpec = graft.operators.IvmOverJoin.Spec(joinCols, Seq("seg"),
+      Seq(Ivm.Count("cnt"), Ivm.Min("w", "min_w"), Ivm.Max("v", "max_v")))
+    graft.operators.IvmOverJoin.create(spark, oDir, fDf(f0).schema,
+      dDf(d0).schema, oSpec, nBuckets = 16)
+    misBucketFact(oDir)
+    def oModel(fact: Seq[(Long, Long, Long)],
+               dim: Seq[(Long, Long, String, Option[Long])]): Set[Row] =
+      joined(fact, dim).groupBy(_._1).map { case (s, rs) =>
+        Row(s, rs.size.toLong, rs.flatMap(_._3).min, rs.map(_._2).max)
+      }.toSet
+    graft.operators.IvmOverJoin.applyDelta(spark, oDir, fDf(f0),
+      fDf(Seq.empty), dDf(d0), dDf(Seq.empty))
+    assert(graft.operators.IvmOverJoin.readView(spark, oDir)
+      .collect().toSet == oModel(f0, d0))
+    graft.operators.IvmOverJoin.applyDelta(spark, oDir, fDf(fIns),
+      fDf(Seq.empty), dDf(dNew), dDf(dOld))
+    assert(graft.operators.IvmOverJoin.readView(spark, oDir)
+      .collect().toSet == oModel(f1, d1))
+  }
+
   /** Two-sided CDC events frame for the join-view stream wrapper. */
   private def jev(fIns: Seq[(Long, Long)], fDel: Seq[(Long, Long)],
                   dIns: Seq[(Long, String)], dDel: Seq[(Long, String)])
