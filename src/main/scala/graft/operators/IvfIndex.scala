@@ -960,8 +960,8 @@ object IvfIndex {
 
   /** A version must be committed AND still on disk (see
     * [[MinhashIndex]]'s identical contract). */
-  private def requireLiveVersion(spark: SparkSession, dir: String,
-                                 version: Int): Unit = {
+  private[graft] def requireLiveVersion(spark: SparkSession, dir: String,
+                                        version: Int): Unit = {
     val latest = latestVersion(spark, dir)
     require(version >= 1 && version <= latest,
       s"version $version out of [1, $latest] at $dir")
@@ -982,15 +982,77 @@ object IvfIndex {
    * ANN top-k pinned to a committed version — the replay primitive.
    * Probe lists are computed driver-side from the version's centroids
    * (queries are small by contract — every formulation broadcasts
-   * them); each manifest segment is scanned with a static
-   * `list_id IN (…)` partition filter, so only probed directories are
-   * listed and read regardless of how many appends the index has
-   * absorbed.
+   * them).
+   *
+   * An exact (non-PQ) version whose manifest counts × dim stay within
+   * [[SnapshotMaxFloats]] is served from driver-side snapshots of its
+   * segments ([[localTopK]]): no Spark job once its segments are
+   * cached. Other versions run the Spark scan, [[topKAtScan]]. Both
+   * return the same rows.
    */
   def topKAt(spark: SparkSession, dir: String, version: Int,
              queries: DataFrame, id: String, vec: String, k: Int,
              nProbe: Int = 4, refine: Int = 8,
              usePq: Boolean = true): DataFrame = {
+    requireLiveVersion(spark, dir, version)
+    localTopK(spark, dir, version, queries, id, vec, k, nProbe) match {
+      case Some((schema, rows)) =>
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      case None => topKAtScan(spark, dir, version, queries, id, vec, k,
+        nProbe, refine, usePq)
+    }
+  }
+
+  /** The `nProbe` lists nearest one query row's `vec` by cosine, in
+    * probe order. Same arithmetic order as Similarity.bestListsArr:
+    * left-associated double sums, ties by centroid index. */
+  private def nearestLists(r: org.apache.spark.sql.Row, vec: String,
+                           cents: Array[Array[Double]],
+                           centNorms: Array[Double],
+                           nProbe: Int): Seq[Int] = {
+    // this driver probe accepts any boxed numeric element; the
+    // Catalyst scoring kernel (FloatVecBestLists) is ARRAY<FLOAT>
+    // only. Both demand full-dim, null/NaN-free vectors — enforced
+    // HERE so malformed input fails loudly on one path instead of
+    // silently diverging between the two (a cosine against null/NaN
+    // is null/NaN, so "nearest lists" is undefined; a short vector
+    // would truncate in Catalyst but throw in the driver fold).
+    val v = r.getSeq[Number](1)
+    require(v != null, s"null $vec for query ${r.get(0)}")
+    require(v.length == cents.head.length,
+      s"query ${r.get(0)} has dim ${v.length}, index has ${cents.head.length}")
+    require(v.forall(x => x != null && !x.doubleValue.isNaN),
+      s"null/NaN element in $vec for query ${r.get(0)}")
+    cents.indices.map { ci =>
+      // zero-norm centroids score -inf (they rank last), matching
+      // Similarity.sortedListsByCos exactly — NaN ordering otherwise
+      // diverges between the driver sort and Catalyst
+      if (centNorms(ci) == 0.0) (Double.NegativeInfinity, ci)
+      else {
+        var dot = 0.0
+        var i = 0
+        while (i < cents(ci).length) {
+          dot += v(i).doubleValue * cents(ci)(i)
+          i += 1
+        }
+        (dot / centNorms(ci), ci)
+      }
+    }.sortBy { case (s, ci) => (-s, ci) }.take(nProbe).map(_._2)
+  }
+
+  /**
+   * [[topKAt]] as a Spark scan — the path for PQ versions and versions
+   * above the snapshot bound, and the reference the specs compare the
+   * snapshot path with. Each manifest segment is scanned with a static
+   * `list_id IN (…)` partition filter, so only probed directories are
+   * listed and read regardless of how many appends the index has
+   * absorbed.
+   */
+  private[graft] def topKAtScan(spark: SparkSession, dir: String,
+                                version: Int, queries: DataFrame,
+                                id: String, vec: String, k: Int,
+                                nProbe: Int = 4, refine: Int = 8,
+                                usePq: Boolean = true): DataFrame = {
     requireLiveVersion(spark, dir, version)
     // a version whose manifest lists NO segments (every row of a fold
     // was tombstone-masked — a CDC stream that deleted everything) has
@@ -1012,9 +1074,7 @@ object IvfIndex {
     // them), so probe lists are computed HERE, in Scala, from the
     // collected rows — the Catalyst alternative embeds an
     // nList × dim scoring expression whose analysis/codegen (not
-    // execution) dominated the probe. Same arithmetic order as
-    // Similarity.bestListsArr: left-associated double sums, ties by
-    // centroid index.
+    // execution) dominated the probe.
     val centNorms = cents.map(c => math.sqrt(c.map(x => x * x).sum))
     val qRows = queries.select(col(id), col(vec)).collect()
     val qSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -1029,35 +1089,7 @@ object IvfIndex {
     // qidx indexes the per-query ADC lookup table
     val explodedIdx = new java.util.ArrayList[org.apache.spark.sql.Row]()
     qRows.zipWithIndex.foreach { case (r, qi) =>
-      // this driver probe accepts any boxed numeric element; the
-      // Catalyst scoring kernel (FloatVecBestLists) is ARRAY<FLOAT>
-      // only. Both demand full-dim, null/NaN-free vectors — enforced
-      // HERE so malformed input fails loudly on one path instead of
-      // silently diverging between the two (a cosine against null/NaN
-      // is null/NaN, so "nearest lists" is undefined; a short vector
-      // would truncate in Catalyst but throw in the driver fold).
-      val v = r.getSeq[Number](1)
-      require(v != null, s"null $vec for query ${r.get(0)}")
-      require(v.length == cents.head.length,
-        s"query ${r.get(0)} has dim ${v.length}, index has ${cents.head.length}")
-      require(v.forall(x => x != null && !x.doubleValue.isNaN),
-        s"null/NaN element in $vec for query ${r.get(0)}")
-      val probes = cents.indices.map { ci =>
-        // zero-norm centroids score -inf (they rank last), matching
-        // Similarity.sortedListsByCos exactly — NaN ordering otherwise
-        // diverges between the driver sort and Catalyst
-        if (centNorms(ci) == 0.0) (Double.NegativeInfinity, ci)
-        else {
-          var dot = 0.0
-          var i = 0
-          while (i < cents(ci).length) {
-            dot += v(i).doubleValue * cents(ci)(i)
-            i += 1
-          }
-          (dot / centNorms(ci), ci)
-        }
-      }.sortBy { case (s, ci) => (-s, ci) }.take(nProbe)
-      probes.foreach { case (_, ci) =>
+      nearestLists(r, vec, cents, centNorms, nProbe).foreach { ci =>
         exploded.add(org.apache.spark.sql.Row(r.get(0), r.get(1), ci))
         explodedIdx.add(org.apache.spark.sql.Row(r.get(0), qi, ci))
       }
@@ -1170,6 +1202,203 @@ object IvfIndex {
     }
   }
 
+  // ------------------------------------------------------------------
+  // Probe snapshots: exact versions up to SnapshotMaxFloats are scored
+  // in the driver from cached per-segment rows (SegmentCache).
+  // ------------------------------------------------------------------
+
+  import org.apache.spark.sql.Row
+  import org.apache.spark.sql.types._
+
+  /** Largest exact version, by Σ manifest list counts × dim (a bound on
+    * its vector floats, tombstone-masked rows included), that
+    * [[topKAt]] serves from driver-side segment snapshots. */
+  private val SnapshotMaxFloats = 1L << 23
+
+  /** One segment's rows of one list: ids, vectors, and each vector's
+    * norm as normF computes it. */
+  private final class ListRows(val ids: Array[Long],
+                               val vecs: Array[Array[Float]],
+                               val norms: Array[Double])
+
+  /** A segment's rows by list, with its id field. */
+  private final class VecSegment(val idField: StructField,
+                                 val lists: Map[Int, ListRows])
+
+  /** A tombstone dataset: list-global masks (id → sequence) and
+    * list-scoped ones ((id, list) → sequence), the max per key. */
+  private final class VecTombs(val global: Map[Long, Int],
+                               val scoped: Map[(Long, Int), Int])
+
+  private def integral(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+
+  /** FloatVecDot's arithmetic: left-associated double sum of
+    * (double)a[i] * (double)b[i] over the shorter length. */
+  private def floatDot(a: Array[Float], b: Array[Float]): Double = {
+    val n = math.min(a.length, b.length)
+    var s = 0.0
+    var i = 0
+    while (i < n) { s += a(i).toDouble * b(i).toDouble; i += 1 }
+    s
+  }
+
+  /** One segment's rows, loaded once per segment in one driver read
+    * pinned to the schema Spark wrote into its footer. None when only
+    * the scan reproduces Spark's semantics for it: the segment lacks
+    * `id` or `vec`, its id is not integral, its vectors are not
+    * ARRAY<FLOAT>, or a vector is null. */
+  private def vecSnapshot(spark: SparkSession, dir: String, seg: String,
+                          id: String, vec: String): Option[VecSegment] = {
+    val key = SegmentCache.keyOf(fs(spark, dir), segPath(dir, seg))
+    SegmentCache.getOrLoad(key) {
+      // a partitioned segment's files do not hold list_id
+      val schema = SegmentCache.footerSchema(spark, key).map(s =>
+        if (s.fieldNames.contains("list_id")) s
+        else s.add("list_id", IntegerType))
+        .filter(s => s.fieldNames.contains(id) && s.fieldNames.contains(vec) &&
+          integral(s(id).dataType) && (s(vec).dataType match {
+            case ArrayType(FloatType, _) => true
+            case _ => false
+          }))
+      schema match {
+        case None => (None, 0L)
+        case Some(sc) =>
+          val rows = SegmentCache.readRows(spark, key,
+            Seq(sc(id), sc(vec), sc("list_id")))
+          if (rows.exists(r => r(1) == null || r(2) == null)) (None, 0L)
+          else {
+            // a null id never passes the scan's query_id =!= neighbor_id
+            val lists = rows.filter(_(0) != null)
+              .groupBy(_(2).asInstanceOf[Long].toInt)
+              .map { case (l, rs) =>
+                val vs = rs.map(_(1).asInstanceOf[Array[Float]]).toArray
+                l -> new ListRows(rs.map(_(0).asInstanceOf[Long]).toArray, vs,
+                  vs.map(v => math.sqrt(floatDot(v, v))))
+              }
+            (Some(new VecSegment(sc(id), lists)), rows.iterator.map(r =>
+              64L + 4L * r(1).asInstanceOf[Array[Float]].length).sum)
+          }
+      }
+    }
+  }
+
+  /** One tombstone dataset (see [[tombFrame]] for the `d`/`e`/`c`
+    * shapes), loaded once; None when its id is not integral. */
+  private def vecTombSnapshot(spark: SparkSession, dir: String,
+                              name: String): Option[VecTombs] = {
+    val key = SegmentCache.keyOf(fs(spark, dir), tombPath(dir, name))
+    SegmentCache.getOrLoad(key) {
+      SegmentCache.footerSchema(spark, key) match {
+        case None => (Some(new VecTombs(Map.empty, Map.empty)), 64L)
+        case Some(sc) if !sc.fieldNames.contains("id") ||
+            !integral(sc("id").dataType) => (None, 0L)
+        case Some(sc) =>
+          // (id, list_id or null, seq): d/e sequences are the name's
+          val cols = sc("id") +: Seq("list_id", "seq").filter(sc.fieldNames.contains)
+            .map(sc(_))
+          val rows = SegmentCache.readRows(spark, key, cols).map { r =>
+            val v = cols.map(_.name).zip(r).toMap
+            (v("id"), v.getOrElse("list_id", null),
+              if (name.startsWith("c")) v("seq") else nameSeq(name).toLong)
+          }.filter(r => r._1 != null && r._3 != null)
+          def seq(r: (Any, Any, Any)): Int = r._3.asInstanceOf[Long].toInt
+          val (g, sl) = rows.partition(_._2 == null)
+          (Some(new VecTombs(
+            g.groupMapReduce(_._1.asInstanceOf[Long])(seq)(math.max),
+            sl.groupMapReduce(r => (r._1.asInstanceOf[Long],
+              r._2.asInstanceOf[Long].toInt))(seq)(math.max))),
+            64L + 96L * rows.length)
+      }
+    }
+  }
+
+  /** [[topKAt]]'s rows and schema scored in the driver from segment
+    * snapshots, or None when the Spark scan must serve the probe: a PQ
+    * version, no segments, a version above [[SnapshotMaxFloats]], a
+    * non-integral query id or non-ARRAY<FLOAT> query vector, a segment
+    * or tombstone set [[vecSnapshot]]/[[vecTombSnapshot]] declines, or
+    * a zero-norm or NaN cosine (Spark's division semantics). Lists are
+    * chosen as the scan chooses them; cosines are FloatVecDot's;
+    * a query never returns itself; ties break by neighbor id. The
+    * caller checks the version is live. */
+  private[graft] def localTopK(spark: SparkSession, dir: String,
+                               version: Int, queries: DataFrame,
+                               id: String, vec: String, k: Int,
+                               nProbe: Int): Option[(StructType, Seq[Row])] = {
+    val segs = readSegments(spark, dir, version)
+    if (segs.isEmpty || readBooks(spark, dir, version).isDefined) return None
+    val cents = readCentroids(spark, dir, version)
+    val qField = queries.schema(id)
+    val qVecOk = queries.schema(vec).dataType match {
+      case ArrayType(FloatType, _) => true
+      case _ => false
+    }
+    if (!integral(qField.dataType) || !qVecOk ||
+      readCounts(spark, dir, version).values.sum * cents.head.length >
+        SnapshotMaxFloats) return None
+    val snaps = segs.map(vecSnapshot(spark, dir, _, id, vec))
+    if (snaps.exists(_.isEmpty) ||
+      snaps.flatten.map(_.idField.dataType).distinct.size > 1) return None
+    val tombs = readTombstones(spark, dir, version)
+      .map(vecTombSnapshot(spark, dir, _))
+    if (tombs.exists(_.isEmpty)) return None
+    val global = SegmentCache.maxMerge(tombs.flatten.map(_.global))
+    val scoped = SegmentCache.maxMerge(tombs.flatten.map(_.scoped))
+    val segRows = segs.map(nameSeq).zip(snaps.flatten)
+    val centNorms = cents.map(c => math.sqrt(c.map(x => x * x).sum))
+    // (cos, neighbor id) candidates per query id; rows sharing an id
+    // pool their candidates, as the scan's window partition does
+    val byQuery = scala.collection.mutable.LinkedHashMap
+      .empty[Any, scala.collection.mutable.ArrayBuffer[(Double, Long)]]
+    // a zero-norm pair divides by zero and a NaN cosine sorts first in
+    // Spark: such probes are left to the scan
+    var undefinedCos = false
+    for (r <- queries.select(col(id), col(vec)).collect()) {
+      val lists = nearestLists(r, vec, cents, centNorms, nProbe)
+      // a null query id matches nothing under query_id =!= neighbor_id
+      if (!r.isNullAt(0)) {
+        val q = r.get(0).asInstanceOf[Number].longValue
+        val qv = r.getSeq[Number](1).map(_.floatValue).toArray
+        val qn = math.sqrt(floatDot(qv, qv))
+        val buf = byQuery.getOrElseUpdate(r.get(0),
+          scala.collection.mutable.ArrayBuffer.empty)
+        for (l <- lists; (seq, sg) <- segRows; lr <- sg.lists.get(l);
+             i <- lr.ids.indices) {
+          val nid = lr.ids(i)
+          if (nid != q && !global.get(nid).exists(_ > seq) &&
+            !scoped.get((nid, l)).exists(_ > seq)) {
+            val den = qn * lr.norms(i)
+            val cos = floatDot(qv, lr.vecs(i)) / den
+            undefinedCos ||= den == 0.0 || cos.isNaN
+            buf += ((cos, nid))
+          }
+        }
+      }
+    }
+    if (undefinedCos) return None
+    val nField = snaps.head.get.idField
+    val toId: Long => Any = nField.dataType match {
+      case ByteType => _.toByte
+      case ShortType => _.toShort
+      case IntegerType => _.toInt
+      case _ => identity
+    }
+    val rows = byQuery.toSeq.flatMap { case (qid, cands) =>
+      // -0.0 and 0.0 compare equal, as in Spark's ordering
+      cands.sortWith((a, b) => a._1 > b._1 || (a._1 == b._1 && a._2 < b._2))
+        .take(k).zipWithIndex.map { case ((cos, nid), i) =>
+          Row(qid, i + 1, toId(nid), cos)
+        }
+    }
+    Some((StructType(Seq(qField.copy(name = "query_id"),
+      StructField("rnk", IntegerType, nullable = false),
+      nField.copy(name = "neighbor_id"),
+      StructField("cos", DoubleType))), rows))
+  }
+
   /** Drop versions older than the last `retainLast` and every segment
     * no retained manifest references (compactions strand their
     * predecessors; crashed appends strand orphans). In-flight segments
@@ -1196,8 +1425,10 @@ object IvfIndex {
         // committed version — latest+1 may be an append in flight
         val num = name.drop(1).takeWhile(_.isDigit).toIntOption
           .getOrElse(Int.MaxValue)
-        if (!referenced.contains(name) && num <= latest)
+        if (!referenced.contains(name) && num <= latest) {
           f.delete(st.getPath, true)
+          SegmentCache.dropUnder(f, st.getPath)
+        }
       }
     // tombstone datasets follow the same rule: reap what no retained
     // manifest references (compactions retire them; crashed
@@ -1211,8 +1442,10 @@ object IvfIndex {
         val name = st.getPath.getName
         val num = name.drop(1).takeWhile(_.isDigit).toIntOption
           .getOrElse(Int.MaxValue)
-        if (!refTombs.contains(name) && num <= latest)
+        if (!refTombs.contains(name) && num <= latest) {
           f.delete(st.getPath, true)
+          SegmentCache.dropUnder(f, st.getPath)
+        }
       }
   }
 }

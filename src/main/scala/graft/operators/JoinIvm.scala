@@ -473,7 +473,7 @@ object JoinIvm {
           statsTransfer(fMeta, dMeta, spec.joinCols)
         val dimOldForDF =
           if (transfer)
-            MergeTable.readForKeysPre(spark, dimzDir(dir), dv0,
+            MergeTable.readForKeysPre(spark, dimzDir(dir), dMeta, dv0,
               dF.select(spec.joinCols.map(col): _*),
               sidesStaged.get._1.stats.keySet)
           else MergeTable.readForKeysAt(spark, dimzDir(dir),
@@ -490,8 +490,8 @@ object JoinIvm {
         val dDKeys = dD.select(spec.joinCols.map(col): _*).distinct()
         val factOldForDD =
           (if (transfer)
-            MergeTable.readForKeysPre(spark, factzDir(dir), fv0, dDKeys,
-              sidesStaged.get._2.stats.keySet)
+            MergeTable.readForKeysPre(spark, factzDir(dir), fMeta, fv0,
+              dDKeys, sidesStaged.get._2.stats.keySet)
           else MergeTable.readForKeysAt(spark, factzDir(dir),
             fv0, dDKeys)._1)
           .join(broadcast(dDKeys), spec.joinCols, "left_semi")

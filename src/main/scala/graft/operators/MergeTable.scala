@@ -473,7 +473,7 @@ object MergeTable {
     val m = readMeta(spark, dir)
     val touched = keys.select(bucketExpr(m).as("__bucket")).distinct()
       .collect().map(_.getInt(0)).toSet
-    (readForKeysPre(spark, dir, version, keys, touched), touched)
+    (readForKeysPre(spark, dir, m, version, keys, touched), touched)
   }
 
   /** [[readForKeysAt]] for callers that ALREADY hold the keys' touched
@@ -481,11 +481,12 @@ object MergeTable {
     * same columns/nBuckets/types — the join-IVM families' side z-sets)
     * — skips the touched-bucket collect job while keeping the
     * mass-gated candidate pushdown (r15, guide §1.2: one driver job
-    * per transferred read). */
+    * per transferred read). `m` is the table's [[Meta]], which every
+    * caller has already read. */
   private[graft] def readForKeysPre(spark: SparkSession, dir: String,
-                                    version: Int, keys: DataFrame,
+                                    m: Meta, version: Int,
+                                    keys: DataFrame,
                                     touched: Set[Int]): DataFrame = {
-    val m = readMeta(spark, dir)
     val minRows = confL(spark, "graft.mergetable.keyPrune.minRows", 1000000L)
     val mass = readManifest(spark, dir, version)
       .filter(e => touched(e._1)).map(_._3).sum

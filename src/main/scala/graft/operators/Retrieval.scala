@@ -1,8 +1,9 @@
 package graft.operators
 
 import graft.functions.{TextFunctions => TF}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /**
  * Retrieval fusion and data-selection scoring — the steps that sit
@@ -99,6 +100,11 @@ object Retrieval {
    * TermIndex.ExactUnbounded` to force the exact sparse leg
    * regardless of shape (the oracled q_hybrid_rrf_idx does — its
    * contract is equality with the inline hybrid).
+   *
+   * Small index versions serve both legs from driver-side segment
+   * snapshots ([[TermIndex.topKAt]], [[IvfIndex.topKAt]]); when both
+   * legs are local the fusion runs in the driver too, and a warm probe
+   * starts no Spark job beyond loading segments it has not seen.
    */
   def hybridRrfIndexed(spark: org.apache.spark.sql.SparkSession,
                        termIdxDir: String, ivfIdxDir: String,
@@ -111,18 +117,25 @@ object Retrieval {
                        rrfK: Int = 60, scale: Long = 1000000L): DataFrame = {
     require(kInner > 0 && k > 0, "kInner and k must be > 0")
     // one pinned version is priced AND probed, so the batch is priced
-    // once: topKAt runs with the gate already applied here
+    // once: the sparse leg runs with the gate already applied here.
+    // Small versions are priced and scored from driver-side snapshots
+    // (TermIndex.localProbe); larger ones by the Spark scan.
     val termV = TermIndex.latestVersion(spark, termIdxDir)
+    TermIndex.requireLiveVersion(spark, termIdxDir, termV)
+    val termLocal = TermIndex.localProbe(spark, termIdxDir, termV,
+      probesText, id, text, termCfg, terms)
     val gated =
       if (termCfg.maxCandidateFraction.isPosInfinity) None
       else {
-        val cost = TermIndex.estimateProbeCostAt(spark, termIdxDir, termV,
-          probesText, id, text, termCfg, terms)
+        val cost = termLocal.map(_.cost).getOrElse(
+          TermIndex.estimateProbeCostScan(spark, termIdxDir, termV,
+            probesText, id, text, termCfg, terms))
         if (cost.candidateFraction > termCfg.maxCandidateFraction)
           Some(cost)
         else None
       }
     lastGate.set(gated)
+    val termTop = if (gated.isEmpty) termLocal.map(_.topK(kInner)) else None
     val bm = gated match {
       case Some(_) =>
         // gated: the sparse leg is skipped for this batch — candidates
@@ -130,17 +143,72 @@ object Retrieval {
         probesText.limit(0).select(lit(0L).as("probe_id"),
           lit(0L).as("doc_id"), lit(0L).as("__rt"))
       case None =>
-        TermIndex.topKAt(spark, termIdxDir, termV, probesText, id, text,
-            kInner,
+        termTop.map(rows => spark.createDataFrame(
+            java.util.Arrays.asList(rows: _*), termLocal.get.schema))
+          .getOrElse(TermIndex.topKAtScan(spark, termIdxDir, termV,
+            probesText, id, text, kInner,
             termCfg.copy(maxCandidateFraction = TermIndex.ExactUnbounded),
-            terms)
+            terms))
           .select(col("probe_id"), col("doc_id"), col("rank").as("__rt"))
     }
-    val dn = IvfIndex.topK(spark, ivfIdxDir, probesEmb, id, vec, kInner,
-        nProbe)
+    val ivfV = IvfIndex.latestVersion(spark, ivfIdxDir)
+    IvfIndex.requireLiveVersion(spark, ivfIdxDir, ivfV)
+    val ivfTop = IvfIndex.localTopK(spark, ivfIdxDir, ivfV, probesEmb, id,
+      vec, kInner, nProbe)
+    val dn = ivfTop.map { case (schema, rows) =>
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      }
+      .getOrElse(IvfIndex.topKAtScan(spark, ivfIdxDir, ivfV, probesEmb, id,
+        vec, kInner, nProbe))
       .select(col("query_id").as("probe_id"),
         col("neighbor_id").as("doc_id"), col("rnk").cast("long").as("__rd"))
-    fuseRrf(bm, dn, k, rrfK, scale)
+    val fused = fuseRrf(bm, dn, k, rrfK, scale)
+    // both legs local (snapshot-served, or the sparse leg gated): fuse
+    // in the driver, as fuseRrf would
+    val bmRows =
+      if (gated.isDefined) Some(Seq.empty)
+      else termTop.map(_.map(r => (r.get(0), r.getLong(2), r.getLong(1))))
+    val dnRows = ivfTop.map(_._2.map(r => (r.get(0), r.get(2),
+      r.getInt(1).toLong)))
+    (for (b <- bmRows; d <- dnRows;
+          rows <- fuseLocal(b, d, bm.schema, dn.schema, k, rrfK, scale))
+      yield spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+        fused.schema))
+      .getOrElse(fused)
+  }
+
+  /** [[fuseRrf]] in the driver over two local legs of
+    * (probe_id, doc_id, rank) rows: the same full-outer join on
+    * (probe_id, doc_id), integer rrf and (rrf desc, doc_id asc) top-k.
+    * None when Spark's semantics would differ from plain value
+    * equality: the legs' key types differ, a probe id is null, or a
+    * negative rrfK could divide by zero. */
+  private def fuseLocal(bm: Seq[(Any, Long, Long)], dn: Seq[(Any, Any, Long)],
+                        bmSchema: StructType, dnSchema: StructType, k: Int,
+                        rrfK: Int, scale: Long): Option[Seq[Row]] = {
+    if (bmSchema("probe_id").dataType != dnSchema("probe_id").dataType ||
+      bmSchema("doc_id").dataType != LongType ||
+      dnSchema("doc_id").dataType != LongType || rrfK < 0 ||
+      bm.exists(_._1 == null) || dn.exists(_._1 == null)) return None
+    def part(rank: Long): Long = scale / (rrfK.toLong + rank)
+    val bmBy = bm.groupMap(r => (r._1, r._2))(r => part(r._3))
+    val dnBy = dn.groupMap(r => (r._1, r._2.asInstanceOf[Long]))(r =>
+      part(r._3))
+    val fused = (bmBy.keySet ++ dnBy.keySet).toSeq.flatMap { key =>
+      val rrfs = (bmBy.get(key), dnBy.get(key)) match {
+        case (Some(a), Some(b)) =>
+          for (x <- a; y <- b) yield java.lang.Math.addExact(x, y)
+        case (a, b) => a.orElse(b).get
+      }
+      rrfs.map(key -> _)
+    }
+    Some(fused.groupBy(_._1._1).toSeq.flatMap { case (pid, rs) =>
+      rs.map { case ((_, doc), rrf) => (doc, rrf) }
+        .sortWith((a, b) => a._2 > b._2 || (a._2 == b._2 && a._1 < b._1))
+        .take(k).zipWithIndex.map { case ((doc, rrf), i) =>
+          Row(pid, i + 1L, doc, rrf)
+        }
+    })
   }
 
   /** The most recent [[hybridRrfIndexed]] gate decision ON THIS

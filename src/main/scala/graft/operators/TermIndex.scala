@@ -759,8 +759,8 @@ object TermIndex {
     v + 1
   }
 
-  private def requireLiveVersion(spark: SparkSession, dir: String,
-                                 version: Int): Unit = {
+  private[graft] def requireLiveVersion(spark: SparkSession, dir: String,
+                                        version: Int): Unit = {
     val latest = latestVersion(spark, dir)
     require(version >= 1 && version <= latest,
       s"version $version not committed (latest $latest)")
@@ -777,10 +777,57 @@ object TermIndex {
 
   /**
    * Top-k corpus docs per probe at a pinned version — pair-for-pair
-   * equal to [[Terms.bm25TopK]] over the same corpus. Steady-state
-   * cost: the probe-vocabulary `bkt=` partitions of each segment's df
-   * (count-sized) and tf (candidate-sized) — nothing corpus-wide is
-   * scanned, no doc-length table is joined (dl rides the tf rows).
+   * equal to [[Terms.bm25TopK]] over the same corpus.
+   *
+   * A version whose manifest holds at most [[SnapshotMaxTokens]]
+   * tokens is served from driver-side snapshots of its segments
+   * ([[localProbe]]): no Spark job once its segments are cached,
+   * beyond at most one small collect of the probe tokens. Larger
+   * versions run the Spark scan, [[topKAtScan]]. Both apply the same
+   * probe-cost gate and return the same rows.
+   */
+  def topKAt(spark: SparkSession, dir: String, version: Int,
+             probes: DataFrame, id: String, text: String, k: Int,
+             cfg: Config = Config(),
+             terms: Column => Column = TF.tokens): DataFrame = {
+    require(k > 0, "k must be > 0")
+    requireLiveVersion(spark, dir, version)
+    localProbe(spark, dir, version, probes, id, text, cfg, terms) match {
+      case Some(lp) =>
+        enforceGate(cfg, lp.cost)
+        lp.topKFrame(spark, k)
+      case None =>
+        topKAtScan(spark, dir, version, probes, id, text, k, cfg, terms)
+    }
+  }
+
+  /** Throws [[ProbeCostExceededException]] when `cost` prices the
+    * batch above `cfg`'s gate; `cost` is not evaluated when the gate
+    * is off. */
+  private def enforceGate(cfg: Config, cost: => ProbeCost): Unit =
+    if (!cfg.maxCandidateFraction.isPosInfinity) {
+      val c = cost
+      if (c.candidateFraction > cfg.maxCandidateFraction)
+        throw new ProbeCostExceededException(
+          f"probe batch priced ABOVE the exact-scoring gate: average " +
+            f"candidate fraction ${c.candidateFraction}%.3f > " +
+            f"maxCandidateFraction ${cfg.maxCandidateFraction}%.3f " +
+            f"(${c.probeCount} probes would score " +
+            f"${c.scoredPostings} postings against ${c.corpusDocs} " +
+            "docs — document-shaped, corpus-linear by the adjudicated " +
+            "exact floor). Nothing was scored. Route the batch to the " +
+            "approximate first stage (Retrieval.hybridRrfIndexed) or " +
+            "set maxCandidateFraction = TermIndex.ExactUnbounded for a " +
+            "deliberate exact run.", c)
+    }
+
+  /**
+   * [[topKAt]] as a Spark scan — the path for versions above the
+   * snapshot bound, and the reference the specs compare the snapshot
+   * path with. Steady-state cost: the probe-vocabulary `bkt=`
+   * partitions of each segment's df (count-sized) and tf
+   * (candidate-sized) — nothing corpus-wide is scanned, no doc-length
+   * table is joined (dl rides the tf rows).
    *
    * Probes ALWAYS run the MAX-SCORE pruned plan ([[maxScoreProbe]]):
    * only rare, high-impact terms generate candidates; common terms'
@@ -802,10 +849,12 @@ object TermIndex {
    * to the approximate first stage ([[Retrieval]]'s indexed
    * hybrid-RRF) instead.
    */
-  def topKAt(spark: SparkSession, dir: String, version: Int,
-             probes: DataFrame, id: String, text: String, k: Int,
-             cfg: Config = Config(),
-             terms: Column => Column = TF.tokens): DataFrame = {
+  private[graft] def topKAtScan(spark: SparkSession, dir: String,
+                                version: Int, probes: DataFrame,
+                                id: String, text: String, k: Int,
+                                cfg: Config = Config(),
+                                terms: Column => Column = TF.tokens)
+      : DataFrame = {
     require(k > 0, "k must be > 0")
     requireLiveVersion(spark, dir, version)
     requireTerms(spark, dir, cfg)
@@ -813,22 +862,8 @@ object TermIndex {
     // df slices BEFORE any posting is read, and refuse document-shaped
     // batches whose exact cost is corpus-linear (see Config's
     // maxCandidateFraction doc; ExactUnbounded opts out deliberately)
-    if (!cfg.maxCandidateFraction.isPosInfinity) {
-      val cost = estimateProbeCostAt(spark, dir, version, probes, id,
-        text, cfg, terms)
-      if (cost.candidateFraction > cfg.maxCandidateFraction)
-        throw new ProbeCostExceededException(
-          f"probe batch priced ABOVE the exact-scoring gate: average " +
-            f"candidate fraction ${cost.candidateFraction}%.3f > " +
-            f"maxCandidateFraction ${cfg.maxCandidateFraction}%.3f " +
-            f"(${cost.probeCount} probes would score " +
-            f"${cost.scoredPostings} postings against ${cost.corpusDocs} " +
-            "docs — document-shaped, corpus-linear by the adjudicated " +
-            "exact floor). Nothing was scored. Route the batch to the " +
-            "approximate first stage (Retrieval.hybridRrfIndexed) or " +
-            "set maxCandidateFraction = TermIndex.ExactUnbounded for a " +
-            "deliberate exact run.", cost)
-    }
+    enforceGate(cfg, estimateProbeCostScan(spark, dir, version, probes,
+      id, text, cfg, terms))
     val segs = readManifest(spark, dir, version)
     val (masked, tombs) = readTombstones(spark, dir, version)
     // corpus scalars shed the tombstoned docs exactly (the manifest
@@ -888,11 +923,23 @@ object TermIndex {
       id, text, cfg, terms)
 
   /** [[estimateProbeCost]] against a pinned version — what the
-    * default-on probe gate inside [[topKAt]] prices. */
+    * default-on probe gate inside [[topKAt]] prices. Priced from the
+    * version's segment snapshots when [[topKAt]] would serve it from
+    * them, else by [[estimateProbeCostScan]]; both give equal costs. */
   def estimateProbeCostAt(spark: SparkSession, dir: String, version: Int,
                           probes: DataFrame, id: String, text: String,
                           cfg: Config = Config(),
-                          terms: Column => Column = TF.tokens): ProbeCost = {
+                          terms: Column => Column = TF.tokens): ProbeCost =
+    localProbe(spark, dir, version, probes, id, text, cfg, terms)
+      .map(_.cost)
+      .getOrElse(estimateProbeCostScan(spark, dir, version, probes, id,
+        text, cfg, terms))
+
+  /** [[estimateProbeCostAt]] from the stored df slices, in Spark. */
+  private[graft] def estimateProbeCostScan(
+      spark: SparkSession, dir: String, version: Int, probes: DataFrame,
+      id: String, text: String, cfg: Config = Config(),
+      terms: Column => Column = TF.tokens): ProbeCost = {
     requireTerms(spark, dir, cfg)
     val segs = readManifest(spark, dir, version)
     val (masked, _) = readTombstones(spark, dir, version)
@@ -1267,6 +1314,171 @@ object TermIndex {
       .reduce(_.unionByName(_))
   }
 
+  // ------------------------------------------------------------------
+  // Probe snapshots: versions up to SnapshotMaxTokens are scored in the
+  // driver from cached per-segment tf rows (SegmentCache).
+  // ------------------------------------------------------------------
+
+  /** Largest version, by Σ manifest nTokens (a bound on its posting
+    * rows), that [[topKAt]] scores from driver-side segment snapshots.
+    * At ~24 B a posting plus per-term overhead, a version at the bound
+    * snapshots to well under [[SegmentCache]]'s byte bound. */
+  private val SnapshotMaxTokens = 1L << 21
+
+  /** One segment's tf rows of one term, as parallel arrays. */
+  private final class Postings(val docId: Array[Long], val tf: Array[Long],
+                               val dl: Array[Long])
+
+  /** One segment's tf rows by term, loaded once per segment in one
+    * schema-pinned driver read. None when a row has a null doc id, tf
+    * or dl: only the scan path gives those Spark's null semantics. */
+  private def tfSnapshot(spark: SparkSession, dir: String,
+                         seg: String): Option[Map[String, Postings]] = {
+    val key = SegmentCache.keyOf(fs(spark, dir), s"${segPath(dir, seg)}/tf")
+    SegmentCache.getOrLoad(key) {
+      val rows = SegmentCache.readRows(spark, key,
+        Seq("tok", "doc_id", "tf", "dl").map(tfSchema(_)))
+      if (rows.exists(r => r(1) == null || r(2) == null || r(3) == null))
+        (None, 0L)
+      else {
+        def longs(rs: Seq[Array[Any]], i: Int): Array[Long] =
+          rs.map(_(i).asInstanceOf[Long]).toArray
+        // a null term joins no probe term
+        val byTok = rows.filter(_(0) != null).groupBy(_(0).asInstanceOf[String])
+          .map { case (t, rs) =>
+            t -> new Postings(longs(rs, 1), longs(rs, 2), longs(rs, 3))
+          }
+        (Some(byTok), byTok.iterator.map { case (t, p) =>
+          120L + 2L * t.length + 24L * p.docId.length }.sum)
+      }
+    }
+  }
+
+  /** One tombstone dataset as doc id → the sequence it masks below
+    * (`d`: its name's; `c`: the stored max per id). */
+  private def tombSnapshot(spark: SparkSession, dir: String,
+                           name: String): Map[Long, Int] = {
+    val key = SegmentCache.keyOf(fs(spark, dir), tombPath(dir, name))
+    SegmentCache.getOrLoad(key) {
+      val coalesced = name.startsWith("c")
+      val m = SegmentCache.readRows(spark, key,
+          StructField("doc_id", LongType) +:
+            (if (coalesced) Seq(StructField("seq", IntegerType)) else Nil))
+        .filter(r => r.forall(_ != null))
+        .groupMapReduce(_(0).asInstanceOf[Long])(r =>
+          if (coalesced) r(1).asInstanceOf[Long].toInt else nameSeq(name))(
+          math.max)
+      (m, 64L + 64L * m.size)
+    }
+  }
+
+  /** A pinned version's segment snapshots with one collected probe
+    * batch. Prices the batch as [[estimateProbeCostScan]] does and
+    * scores it as the classic (unpruned) plan does — every doc holding
+    * a probe term, ranked by (score desc, doc_id asc) — in exact Long
+    * arithmetic ([[Terms.bm25Idf]], [[Terms.bm25Partial]]). The
+    * max-score plan returns the classic plan's answer, so its tiers
+    * are not needed here. */
+  private[graft] final class LocalProbe private[TermIndex] (
+      probeField: StructField, probes: Seq[(Any, Seq[String])],
+      n: Long, tt: Long, segs: Seq[(Int, Map[String, Postings])],
+      masks: Map[Long, Int]) {
+
+    private val vocab: Seq[String] = probes.flatMap(_._2).distinct
+
+    private def byProbe: Seq[(Any, Seq[Seq[String]])] =
+      probes.groupBy(p => Option(p._1)).toSeq
+        .map { case (pid, ps) => (pid.orNull, ps.map(_._2)) }
+
+    /** The probe-cost gate's price: stored df (every posting row,
+      * masked or not — what the df tables hold) against the masked n. */
+    lazy val cost: ProbeCost =
+      if (vocab.isEmpty) ProbeCost(0L, 0L, 0L, n)
+      else {
+        val priced = vocab.flatMap { t =>
+          val df = segs.map(_._2.get(t).fold(0L)(_.docId.length.toLong)).sum
+          if (df > 0 && Terms.bm25Idf(n, df) >= 1) Some(t -> df) else None
+        }.toMap
+        val ws = byProbe.map { case (_, rows) =>
+          rows.iterator.flatten.map(priced.getOrElse(_, 0L))
+            .foldLeft(0L)(java.lang.Math.addExact)
+        }
+        ProbeCost(ws.foldLeft(0L)(java.lang.Math.addExact),
+          (0L +: ws).max, byProbe.length.toLong, n)
+      }
+
+    /** Live postings of each probe term: (doc_id, tf, dl) rows that no
+      * tombstone with a strictly greater sequence masks. */
+    private lazy val live: Map[String, Seq[(Long, Long, Long)]] =
+      vocab.flatMap { t =>
+        val ps = segs.flatMap { case (seq, byTok) =>
+          byTok.get(t).toSeq.flatMap { p =>
+            p.docId.indices.collect {
+              case i if masks.get(p.docId(i)).forall(_ <= seq) =>
+                (p.docId(i), p.tf(i), p.dl(i))
+            }
+          }
+        }
+        if (ps.isEmpty) None else Some(t -> ps)
+      }.toMap
+
+    /** (probe_id, rank, doc_id, score) rows, rank 1..k per probe. */
+    def topK(k: Int): Seq[org.apache.spark.sql.Row] = {
+      val idf = live.map { case (t, ps) => t -> Terms.bm25Idf(n, ps.length) }
+      byProbe.flatMap { case (pid, rows) =>
+        val score = scala.collection.mutable.HashMap.empty[Long, Long]
+        for (toks <- rows; t <- toks; i <- idf.get(t); (d, tf, dl) <- live(t))
+          score(d) = java.lang.Math.addExact(score.getOrElse(d, 0L),
+            Terms.bm25Partial(i, tf, dl, n, tt))
+        score.toSeq
+          .sortWith((a, b) => a._2 > b._2 || (a._2 == b._2 && a._1 < b._1))
+          .take(k).zipWithIndex.map { case ((d, sc), r) =>
+            org.apache.spark.sql.Row(pid, r + 1L, d, sc)
+          }
+      }
+    }
+
+    /** [[topK]]'s schema, the scan path's. */
+    val schema: StructType = StructType(Seq(probeField.copy(name = "probe_id"),
+      StructField("rank", LongType, nullable = false),
+      StructField("doc_id", LongType), StructField("score", LongType)))
+
+    def topKFrame(spark: SparkSession, k: Int): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(topK(k): _*), schema)
+  }
+
+  /** The snapshot of `version` with `probes` collected, or None when
+    * [[topKAt]] must scan instead: the manifest holds more than
+    * [[SnapshotMaxTokens]] tokens, the probe id is not an integral or
+    * string column (whose grouping the driver reproduces exactly), or
+    * a segment has null tf fields. The caller checks the version is
+    * live. */
+  private[graft] def localProbe(spark: SparkSession, dir: String,
+                                version: Int, probes: DataFrame,
+                                id: String, text: String, cfg: Config,
+                                terms: Column => Column)
+      : Option[LocalProbe] = {
+    requireTerms(spark, dir, cfg)
+    val segs = readManifest(spark, dir, version)
+    val probeField = probes.schema(id)
+    val idOk = probeField.dataType match {
+      case ByteType | ShortType | IntegerType | LongType | StringType => true
+      case _ => false
+    }
+    if (!idOk || segs.map(_._3).sum > SnapshotMaxTokens) return None
+    val tfs = segs.map(s => tfSnapshot(spark, dir, s._1))
+    if (tfs.exists(_.isEmpty)) return None
+    val (masked, tombs) = readTombstones(spark, dir, version)
+    val masks = SegmentCache.maxMerge(tombs.map(tombSnapshot(spark, dir, _)))
+    val batch = probes.select(col(id), array_distinct(terms(col(text))))
+      .collect().toSeq
+      .map(r => (r.get(0),
+        if (r.isNullAt(1)) Seq.empty[String] else r.getSeq[String](1)))
+    Some(new LocalProbe(probeField, batch,
+      segs.map(_._2).sum - masked._1, segs.map(_._3).sum - masked._2,
+      segs.map(s => nameSeq(s._1)).zip(tfs.flatten), masks))
+  }
+
   /** Drop versions older than the last `retainLast` and any segment
     * directory no retained manifest references (stranded by a torn
     * append/compaction or superseded by compaction). */
@@ -1286,8 +1498,10 @@ object TermIndex {
         val name = st.getPath.getName
         val num = name.drop(1).takeWhile(_.isDigit).toIntOption
           .getOrElse(Int.MaxValue)
-        if (!referenced.contains(name) && num <= latest)
+        if (!referenced.contains(name) && num <= latest) {
           f.delete(st.getPath, true)
+          SegmentCache.dropUnder(f, st.getPath)
+        }
       }
     // tombstone datasets: reap what no retained manifest references
     // (compactions retire them; crashed deletes strand orphans) —
@@ -1300,8 +1514,10 @@ object TermIndex {
         val name = st.getPath.getName
         val num = name.drop(1).takeWhile(_.isDigit).toIntOption
           .getOrElse(Int.MaxValue)
-        if (!refTombs.contains(name) && num <= latest)
+        if (!refTombs.contains(name) && num <= latest) {
           f.delete(st.getPath, true)
+          SegmentCache.dropUnder(f, st.getPath)
+        }
       }
   }
 }

@@ -172,6 +172,27 @@ object Terms {
   private[graft] val bm25PartialSql: String =
     "(idf_q * tf * 220000) div (1000*tf + 300 + 9*rel)"
 
+  /** [[bm25IdfSql]] in driver-side Long arithmetic, operation for
+    * operation: exact ops throw on overflow as ANSI mode does, and
+    * `toBinaryString` is Spark's `bin` (64 digits for a negative). */
+  private[graft] def bm25Idf(n: Long, df: Long): Long = {
+    import java.lang.Math.{addExact, multiplyExact, subtractExact}
+    val q = addExact(subtractExact(multiplyExact(2L, n),
+      multiplyExact(2L, df)), 1L) / addExact(multiplyExact(2L, df), 1L)
+    java.lang.Long.toBinaryString(addExact(q, 1L)).length - 1L
+  }
+
+  /** [[bm25RelSql]] then [[bm25PartialSql]] in driver-side Long
+    * arithmetic, operation for operation (see [[bm25Idf]]). */
+  private[graft] def bm25Partial(idfQ: Long, tf: Long, dl: Long, n: Long,
+                                 tt: Long): Long = {
+    import java.lang.Math.{addExact, multiplyExact}
+    val rel = multiplyExact(multiplyExact(100L, dl), n) / tt
+    multiplyExact(multiplyExact(idfQ, tf), 220000L) /
+      addExact(addExact(multiplyExact(1000L, tf), 300L),
+        multiplyExact(9L, rel))
+  }
+
   /** Shared scoring tail: Robertson saturation cleared of fractions,
     * partial-agg per (probe, doc), salted two-stage top-k. Expects
     * columns (probe_id, doc_id, tf, dl, idf_q, n, tt). */

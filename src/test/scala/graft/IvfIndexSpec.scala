@@ -423,7 +423,8 @@ class IvfIndexSpec extends AnyFunSuite {
     IvfIndex.build(spark, b0, "vec_id", "embedding", dir, cfg16)
     IvfIndex.append(spark, dir, b1, "vec_id", "embedding", cfg16)
     val q = emb.filter(col("vec_id") < 3)
-    val df = IvfIndex.topK(spark, dir, q, "vec_id", "embedding", 5, nProbe = 2)
+    val df = IvfIndex.topKAtScan(spark, dir, IvfIndex.latestVersion(spark, dir),
+      q, "vec_id", "embedding", 5, nProbe = 2)
     df.collect()
     // inputFiles ignores pruning — read the executed scans' partition
     // filters and their numPartitions metric (what was actually listed)
@@ -489,7 +490,8 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(gotS == gotP && gotS.nonEmpty)
     // and the small segment's scan still filters list_id (pushdown, not
     // directory pruning)
-    val df = IvfIndex.topK(spark, dirS, q, "vec_id", "embedding", 5)
+    val df = IvfIndex.topKAtScan(spark, dirS,
+      IvfIndex.latestVersion(spark, dirS), q, "vec_id", "embedding", 5)
     df.collect()
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -633,7 +635,8 @@ class IvfIndexSpec extends AnyFunSuite {
       case s: QueryStageExec => scans(s.plan)
       case r: ReusedExchangeExec => scans(r.child)
     }.flatten
-    val rerank = IvfIndex.topK(spark, dir, q, "vec_id", "embedding", 5)
+    val rerank = IvfIndex.topKAtScan(spark, dir,
+      IvfIndex.latestVersion(spark, dir), q, "vec_id", "embedding", 5)
     rerank.collect()
     val segScans = scans(rerank.queryExecution.executedPlan).filter(
       _.relation.location.rootPaths.exists(_.toString.contains("/segments/")))
@@ -968,7 +971,7 @@ class IvfIndexSpec extends AnyFunSuite {
     // mass: an nProbe=1 probe at the clump reads ONLY the probed list
     // directories (partition filters present, listed dirs ≤ probed
     // lists per segment) and still answers exactly
-    val df = IvfIndex.topK(spark, dir,
+    val df = IvfIndex.topKAtScan(spark, dir, IvfIndex.latestVersion(spark, dir),
       Seq((5000L, Array(0f, 0f, 10f, 0f))).toDF("id", "vec"),
       "id", "vec", k = 5, nProbe = 1)
     val rows = df.collect()

@@ -1,0 +1,114 @@
+package graft
+
+import graft.functions.{TextFunctions => TF}
+import graft.operators.{IvfIndex, Retrieval, TermIndex}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+/**
+ * Spark-job budgets per public call, counted by a listener and pinned
+ * as upper bounds: the job count of a call is the same on every run,
+ * so a change that adds jobs fails here before it shows as wall time.
+ * A change that must raise a bound says so in CHANGES.md.
+ */
+class JobBudgetSpec extends AnyFunSuite {
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.session.timeZone", "UTC")
+    .getOrCreate()
+
+  private val sf = "/root/testdata/sf0.001"
+
+  /** Spark jobs `f` starts on this thread (its job group). */
+  private def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"budget-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(
+          _.getProperty("spark.jobGroup.id") == group)) n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job budget")
+    try f
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.graft.ListenerDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    n.get
+  }
+
+  test("hybridRrfIndexed probe on a warm sf0.001 index: <= 10 jobs " +
+    "(snapshot path); the scan path's legs pinned beside it") {
+    import spark.implicits._
+    val tDir = java.nio.file.Files.createTempDirectory("budget_term")
+      .toString + "/idx"
+    val iDir = java.nio.file.Files.createTempDirectory("budget_ivf")
+      .toString + "/idx"
+    val tCfg = TermIndex.Config(buckets = 8)
+    val iCfg = IvfIndex.Config(dim = 64, nList = 8, iters = 2)
+    val docs = Tables.load(spark, sf, "documents").select("doc_id", "text")
+    val emb = Tables.load(spark, sf, "embeddings")
+      .select(col("vec_id").as("doc_id"), col("embedding"))
+    // the serving shape of the cdc benchmark: a built index plus one
+    // CDC commit (upserts and deletes) and gc
+    TermIndex.build(spark, docs.filter(col("doc_id") < 450), "doc_id", "text",
+      tDir, tCfg)
+    IvfIndex.build(spark, emb.filter(col("doc_id") < 450), "doc_id",
+      "embedding", iDir, iCfg)
+    val ups = col("doc_id") >= 450 || col("doc_id") % 19 === 0
+    val dels = docs.filter(col("doc_id") % 17 === 1).select("doc_id")
+    TermIndex.applyCdc(spark, tDir, docs.filter(ups), dels, "doc_id", "text",
+      tCfg)
+    TermIndex.gc(spark, tDir, 2)
+    IvfIndex.applyCdc(spark, iDir, emb.filter(ups), dels, "doc_id",
+      "embedding", iCfg)
+    IvfIndex.gc(spark, iDir, 2)
+    // ten three-token search probes and ten vectors, as local rows
+    val text = docs.filter(col("doc_id") % 41 === 5).limit(10)
+      .select((col("doc_id") + 9000000L).as("doc_id"),
+        concat_ws(" ", slice(TF.tokens(col("text")), 1, 3)).as("text"))
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    val vecs = emb.filter(col("doc_id") % 41 === 5).limit(10)
+      .select((col("doc_id") + 9000000L).as("doc_id"), col("embedding"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
+    def probesText: DataFrame = text.toDF("doc_id", "text")
+    def probesEmb: DataFrame = vecs.toDF("doc_id", "embedding")
+    def probe(): Unit = Retrieval.hybridRrfIndexed(spark, tDir, iDir,
+      probesText, probesEmb, "doc_id", "text", "embedding", kInner = 10,
+      k = 3, termCfg = tCfg).collect()
+    probe() // warm: loads the segment snapshots
+    assert(Retrieval.lastGateDecision.isEmpty, "the probe must fuse both legs")
+    val snapshot = Seq.fill(2)(jobsOf(probe()))
+    // the scan path, which serves versions above the snapshot bound:
+    // its two legs and the sparse leg's pricing, each pinned at the
+    // count measured when this budget was set
+    val tv = TermIndex.latestVersion(spark, tDir)
+    val iv = IvfIndex.latestVersion(spark, iDir)
+    val termScan = jobsOf(TermIndex.topKAtScan(spark, tDir, tv, probesText,
+      "doc_id", "text", 10, tCfg.copy(
+        maxCandidateFraction = TermIndex.ExactUnbounded)).collect())
+    val termPrice = jobsOf(TermIndex.estimateProbeCostScan(spark, tDir, tv,
+      probesText, "doc_id", "text", tCfg))
+    val ivfScan = jobsOf(IvfIndex.topKAtScan(spark, iDir, iv, probesEmb,
+      "doc_id", "embedding", 10, 4).collect())
+    info(s"jobs per call: hybrid (snapshot) ${snapshot.mkString(", ")}; " +
+      s"scan legs: term topK $termScan, term pricing $termPrice, " +
+      s"ivf topK $ivfScan")
+    assert(snapshot.forall(_ <= 10), s"snapshot probe: $snapshot jobs")
+    assert(termScan <= TermScanJobs, s"term scan: $termScan jobs")
+    assert(termPrice <= TermPriceJobs, s"term pricing: $termPrice jobs")
+    assert(ivfScan <= IvfScanJobs, s"ivf scan: $ivfScan jobs")
+  }
+
+  // the scan path's counts when the snapshot path was added
+  private val TermScanJobs = 24
+  private val TermPriceJobs = 10
+  private val IvfScanJobs = 7
+}

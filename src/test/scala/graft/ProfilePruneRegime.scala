@@ -71,10 +71,9 @@ object ProfilePruneRegime {
 
     val dir = java.nio.file.Files
       .createTempDirectory("graft_prune_regime").toString + "/tbl"
-    // deterministic scattered keyspace: multiply by a large odd
-    // constant mod 2^63 — a bijection on longs, so keys are unique and
-    // uniformly spread (value gaps ≈ keyspace / bucketRows, the z-set
-    // shape the page-range law models)
+    // deterministic scattered keyspace: id × 1000003 — keys are
+    // unique, with uniform gaps of 1000003, and stay within Long range
+    // under ANSI mode (no multiplication overflows at these row counts)
     val base = spark.range(rows)
       .select((col("id") * lit(1000003L))
         .as("k"), (col("id") % 1000).as("v"))

@@ -14,7 +14,7 @@ object ProfileQueryJobs {
     // A/B lever: GRAFT_PROFILE_CONF="k=v;k=v" overlays session confs
     // (e.g. spark.sql.adaptive.enabled=false) for job-count A/Bs
     val overrides = sys.env.getOrElse("GRAFT_PROFILE_CONF", "")
-      .split(";").filter(_.contains("=")).map { kv =>
+      .split(";").filter(_.indexOf('=') > 0).map { kv =>
         val Array(k, v) = kv.split("=", 2); k -> v
       }
     val spark = overrides.foldLeft(

@@ -1045,6 +1045,8 @@ object StressBench {
       val regDir = java.nio.file.Files
         .createTempDirectory("graft_stress_regime").toString + "/tbl"
       val regRows = 8000000L
+      // keys id × 1000003: unique, with uniform gaps of 1000003, and
+      // within Long range under ANSI mode (8M × 1000003 ≈ 8e12)
       val regBase = spark.range(regRows)
         .select((col("id") * lit(1000003L)).as("k"),
           (col("id") % 1000).as("v"))

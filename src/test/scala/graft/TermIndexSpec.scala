@@ -121,7 +121,8 @@ class TermIndexSpec extends AnyFunSuite {
     val prShort = Seq((1000L, "grp3 filler1 filler2 midtok"),
       (1001L, "grp11 filler3 othertok payload5"),
       (1002L, "filler1 filler2 filler3")).toDF("doc_id", "text")
-    val gotS = TermIndex.topK(spark, dir, prShort, "doc_id", "text", 5, cfg)
+    val gotS = TermIndex.topKAtScan(spark, dir,
+      TermIndex.latestVersion(spark, dir), prShort, "doc_id", "text", 5, cfg)
     val wantS = Terms.bm25TopK(docs240, prShort, "doc_id", "text", 5)
     assert(rows(gotS) === rows(wantS))
     val (okS, fbS) = TermIndex.lastMaxScoreDecision
@@ -135,7 +136,8 @@ class TermIndexSpec extends AnyFunSuite {
       (1003L, "grp0 grp1 grp2 uniq1 uniq2 uniq3 uniq4 uniq5 uniq6 " +
         "uniq7 uniq8 uniq9 uniq10 midtok othertok filler1 filler2"))
       .toDF("doc_id", "text"))
-    val got = TermIndex.topK(spark, dir, pr, "doc_id", "text", 5, cfg)
+    val got = TermIndex.topKAtScan(spark, dir,
+      TermIndex.latestVersion(spark, dir), pr, "doc_id", "text", 5, cfg)
     val want = Terms.bm25TopK(docs240, pr, "doc_id", "text", 5)
     assert(rows(got) === rows(want))
     val (ok, fb) = TermIndex.lastMaxScoreDecision
@@ -147,7 +149,8 @@ class TermIndexSpec extends AnyFunSuite {
     val delIds = docs240.filter(col("doc_id") % 6 === 5).select("doc_id")
     TermIndex.delete(spark, dir, delIds, cfg)
     val reduced = docs240.join(delIds, Seq("doc_id"), "left_anti")
-    val gotM = TermIndex.topK(spark, dir, pr, "doc_id", "text", 5, cfg)
+    val gotM = TermIndex.topKAtScan(spark, dir,
+      TermIndex.latestVersion(spark, dir), pr, "doc_id", "text", 5, cfg)
     val wantM = Terms.bm25TopK(reduced, pr, "doc_id", "text", 5)
     assert(rows(gotM) === rows(wantM))
     val (okM, fbM) = TermIndex.lastMaxScoreDecision
@@ -469,7 +472,8 @@ class TermIndexSpec extends AnyFunSuite {
     // a single-token probe hashes to one bucket
     import spark.implicits._
     val probe = Seq((1L, "spark")).toDF("doc_id", "text")
-    val q = TermIndex.topK(spark, dir, probe, "doc_id", "text", 3, cfg)
+    val q = TermIndex.topKAtScan(spark, dir,
+      TermIndex.latestVersion(spark, dir), probe, "doc_id", "text", 3, cfg)
     val plan = q.queryExecution.executedPlan.toString
     // the partition filter must appear on the scan; a full-index read
     // would carry no bkt filter at all
