@@ -985,10 +985,11 @@ object IvfIndex {
    * them).
    *
    * An exact (non-PQ) version whose manifest counts × dim stay within
-   * [[SnapshotMaxFloats]] is served from driver-side snapshots of its
-   * segments ([[localTopK]]): no Spark job once its segments are
-   * cached. Other versions run the Spark scan, [[topKAtScan]]. Both
-   * return the same rows.
+   * [[SnapshotMaxFloats]], probed by a batch that scores at most
+   * [[SnapshotMaxWalk]] floats, is served from driver-side snapshots
+   * of its segments ([[localTopK]]): no Spark job once its segments
+   * are cached. Other versions and batches run the Spark scan,
+   * [[topKAtScan]]. Both return the same rows.
    */
   def topKAt(spark: SparkSession, dir: String, version: Int,
              queries: DataFrame, id: String, vec: String, k: Int,
@@ -1203,8 +1204,9 @@ object IvfIndex {
   }
 
   // ------------------------------------------------------------------
-  // Probe snapshots: exact versions up to SnapshotMaxFloats are scored
-  // in the driver from cached per-segment rows (SegmentCache).
+  // Probe snapshots: exact versions up to SnapshotMaxFloats, probed by
+  // batches up to SnapshotMaxWalk, are scored in the driver from cached
+  // per-segment rows (SegmentCache).
   // ------------------------------------------------------------------
 
   import org.apache.spark.sql.Row
@@ -1212,8 +1214,21 @@ object IvfIndex {
 
   /** Largest exact version, by Σ manifest list counts × dim (a bound on
     * its vector floats, tombstone-masked rows included), that
-    * [[topKAt]] serves from driver-side segment snapshots. */
+    * [[topKAt]] serves from driver-side segment snapshots. Measured
+    * with graft.ProbeSnapshotBound (130,000 64-float vectors, 8.3M
+    * floats, 32 lists, 4 cores): the snapshots took 2.6–4.5 s to load
+    * and retained 36 MB of heap ([[SegmentCache]] counted 40 MB),
+    * under a third of its byte bound. */
   private val SnapshotMaxFloats = 1L << 23
+
+  /** Most vector floats a query batch may score (every row of each
+    * query's probed lists) and still be served from the snapshots;
+    * larger batches run the scan. On the index above, in three runs,
+    * the driver won at 10 queries (10M floats: 0.39–0.94 s against
+    * 0.86–1.53 s) and at 1000 (1.0G floats: 7.9–9.9 s against
+    * 9.4–10.4 s), but lost one of three at 100 (101M floats), so the
+    * bound sits below the 100-query walk. */
+  private val SnapshotMaxWalk = 1L << 26
 
   /** One segment's rows of one list: ids, vectors, and each vector's
     * norm as normF computes it. */
@@ -1266,20 +1281,33 @@ object IvfIndex {
       schema match {
         case None => (None, 0L)
         case Some(sc) =>
-          val rows = SegmentCache.readRows(spark, key,
-            Seq(sc(id), sc(vec), sc("list_id")))
-          if (rows.exists(r => r(1) == null || r(2) == null)) (None, 0L)
+          // a null id never passes the scan's query_id =!= neighbor_id
+          val byList = scala.collection.mutable.HashMap
+            .empty[Int, (scala.collection.mutable.ArrayBuilder[Long],
+              scala.collection.mutable.ArrayBuilder[Array[Float]])]
+          var nulls = false
+          var bytes = 0L
+          SegmentCache.foreachRow(spark, key,
+              Seq(sc(id), sc(vec), sc("list_id"))) { r =>
+            if (r(1) == null || r(2) == null) nulls = true
+            else if (r(0) != null) {
+              val v = r(1).asInstanceOf[Array[Float]]
+              val (ids, vs) = byList.getOrElseUpdate(
+                r(2).asInstanceOf[Long].toInt,
+                (Array.newBuilder[Long], Array.newBuilder[Array[Float]]))
+              ids += r(0).asInstanceOf[Long]
+              vs += v
+              bytes += 64L + 4L * v.length
+            }
+          }
+          if (nulls) (None, 0L)
           else {
-            // a null id never passes the scan's query_id =!= neighbor_id
-            val lists = rows.filter(_(0) != null)
-              .groupBy(_(2).asInstanceOf[Long].toInt)
-              .map { case (l, rs) =>
-                val vs = rs.map(_(1).asInstanceOf[Array[Float]]).toArray
-                l -> new ListRows(rs.map(_(0).asInstanceOf[Long]).toArray, vs,
-                  vs.map(v => math.sqrt(floatDot(v, v))))
-              }
-            (Some(new VecSegment(sc(id), lists)), rows.iterator.map(r =>
-              64L + 4L * r(1).asInstanceOf[Array[Float]].length).sum)
+            val lists = byList.iterator.map { case (l, (ids, vs)) =>
+              val va = vs.result()
+              l -> new ListRows(ids.result(), va,
+                va.map(v => math.sqrt(floatDot(v, v))))
+            }.toMap
+            (Some(new VecSegment(sc(id), lists)), bytes)
           }
       }
     }
@@ -1299,18 +1327,26 @@ object IvfIndex {
           // (id, list_id or null, seq): d/e sequences are the name's
           val cols = sc("id") +: Seq("list_id", "seq").filter(sc.fieldNames.contains)
             .map(sc(_))
-          val rows = SegmentCache.readRows(spark, key, cols).map { r =>
-            val v = cols.map(_.name).zip(r).toMap
-            (v("id"), v.getOrElse("list_id", null),
-              if (name.startsWith("c")) v("seq") else nameSeq(name).toLong)
-          }.filter(r => r._1 != null && r._3 != null)
-          def seq(r: (Any, Any, Any)): Int = r._3.asInstanceOf[Long].toInt
-          val (g, sl) = rows.partition(_._2 == null)
-          (Some(new VecTombs(
-            g.groupMapReduce(_._1.asInstanceOf[Long])(seq)(math.max),
-            sl.groupMapReduce(r => (r._1.asInstanceOf[Long],
-              r._2.asInstanceOf[Long].toInt))(seq)(math.max))),
-            64L + 96L * rows.length)
+          val names = cols.map(_.name)
+          val global = scala.collection.mutable.LongMap.empty[Int]
+          val scoped = scala.collection.mutable.HashMap.empty[(Long, Int), Int]
+          var n = 0L
+          SegmentCache.foreachRow(spark, key, cols) { r =>
+            val v = names.zip(r).toMap
+            val q = if (name.startsWith("c")) v("seq") else nameSeq(name).toLong
+            if (v("id") != null && q != null) {
+              val i = v("id").asInstanceOf[Long]
+              val s = q.asInstanceOf[Long].toInt
+              n += 1
+              v.getOrElse("list_id", null) match {
+                case null => global(i) = math.max(s, global.getOrElse(i, s))
+                case l =>
+                  val k = (i, l.asInstanceOf[Long].toInt)
+                  scoped(k) = math.max(s, scoped.getOrElse(k, s))
+              }
+            }
+          }
+          (Some(new VecTombs(global.toMap, scoped.toMap)), 64L + 96L * n)
       }
     }
   }
@@ -1318,8 +1354,9 @@ object IvfIndex {
   /** [[topKAt]]'s rows and schema scored in the driver from segment
     * snapshots, or None when the Spark scan must serve the probe: a PQ
     * version, no segments, a version above [[SnapshotMaxFloats]], a
-    * non-integral query id or non-ARRAY<FLOAT> query vector, a segment
-    * or tombstone set [[vecSnapshot]]/[[vecTombSnapshot]] declines, or
+    * non-integral query id or non-ARRAY<FLOAT> query vector, a batch
+    * that would score more than `maxWalk` floats, a segment or
+    * tombstone set [[vecSnapshot]]/[[vecTombSnapshot]] declines, or
     * a zero-norm or NaN cosine (Spark's division semantics). Lists are
     * chosen as the scan chooses them; cosines are FloatVecDot's;
     * a query never returns itself; ties break by neighbor id. The
@@ -1327,7 +1364,9 @@ object IvfIndex {
   private[graft] def localTopK(spark: SparkSession, dir: String,
                                version: Int, queries: DataFrame,
                                id: String, vec: String, k: Int,
-                               nProbe: Int): Option[(StructType, Seq[Row])] = {
+                               nProbe: Int,
+                               maxWalk: Long = SnapshotMaxWalk)
+      : Option[(StructType, Seq[Row])] = {
     val segs = readSegments(spark, dir, version)
     if (segs.isEmpty || readBooks(spark, dir, version).isDefined) return None
     val cents = readCentroids(spark, dir, version)
@@ -1336,9 +1375,18 @@ object IvfIndex {
       case ArrayType(FloatType, _) => true
       case _ => false
     }
+    val counts = readCounts(spark, dir, version)
     if (!integral(qField.dataType) || !qVecOk ||
-      readCounts(spark, dir, version).values.sum * cents.head.length >
-        SnapshotMaxFloats) return None
+      counts.values.sum * cents.head.length > SnapshotMaxFloats) return None
+    val centNorms = cents.map(c => math.sqrt(c.map(x => x * x).sum))
+    // a null query id matches nothing under query_id =!= neighbor_id
+    val qs = queries.select(col(id), col(vec)).collect().toSeq
+      .map(r => (r, nearestLists(r, vec, cents, centNorms, nProbe)))
+      .filterNot(_._1.isNullAt(0))
+    // floats scored: every row of every probed list, masked or not
+    val walk = qs.iterator.flatMap(_._2).map(counts.getOrElse(_, 0L)).sum *
+      cents.head.length
+    if (walk > maxWalk) return None
     val snaps = segs.map(vecSnapshot(spark, dir, _, id, vec))
     if (snaps.exists(_.isEmpty) ||
       snaps.flatten.map(_.idField.dataType).distinct.size > 1) return None
@@ -1348,7 +1396,6 @@ object IvfIndex {
     val global = SegmentCache.maxMerge(tombs.flatten.map(_.global))
     val scoped = SegmentCache.maxMerge(tombs.flatten.map(_.scoped))
     val segRows = segs.map(nameSeq).zip(snaps.flatten)
-    val centNorms = cents.map(c => math.sqrt(c.map(x => x * x).sum))
     // (cos, neighbor id) candidates per query id; rows sharing an id
     // pool their candidates, as the scan's window partition does
     val byQuery = scala.collection.mutable.LinkedHashMap
@@ -1356,25 +1403,21 @@ object IvfIndex {
     // a zero-norm pair divides by zero and a NaN cosine sorts first in
     // Spark: such probes are left to the scan
     var undefinedCos = false
-    for (r <- queries.select(col(id), col(vec)).collect()) {
-      val lists = nearestLists(r, vec, cents, centNorms, nProbe)
-      // a null query id matches nothing under query_id =!= neighbor_id
-      if (!r.isNullAt(0)) {
-        val q = r.get(0).asInstanceOf[Number].longValue
-        val qv = r.getSeq[Number](1).map(_.floatValue).toArray
-        val qn = math.sqrt(floatDot(qv, qv))
-        val buf = byQuery.getOrElseUpdate(r.get(0),
-          scala.collection.mutable.ArrayBuffer.empty)
-        for (l <- lists; (seq, sg) <- segRows; lr <- sg.lists.get(l);
-             i <- lr.ids.indices) {
-          val nid = lr.ids(i)
-          if (nid != q && !global.get(nid).exists(_ > seq) &&
-            !scoped.get((nid, l)).exists(_ > seq)) {
-            val den = qn * lr.norms(i)
-            val cos = floatDot(qv, lr.vecs(i)) / den
-            undefinedCos ||= den == 0.0 || cos.isNaN
-            buf += ((cos, nid))
-          }
+    for ((r, lists) <- qs) {
+      val q = r.get(0).asInstanceOf[Number].longValue
+      val qv = r.getSeq[Number](1).map(_.floatValue).toArray
+      val qn = math.sqrt(floatDot(qv, qv))
+      val buf = byQuery.getOrElseUpdate(r.get(0),
+        scala.collection.mutable.ArrayBuffer.empty)
+      for (l <- lists; (seq, sg) <- segRows; lr <- sg.lists.get(l);
+           i <- lr.ids.indices) {
+        val nid = lr.ids(i)
+        if (nid != q && !global.get(nid).exists(_ > seq) &&
+          !scoped.get((nid, l)).exists(_ > seq)) {
+          val den = qn * lr.norms(i)
+          val cos = floatDot(qv, lr.vecs(i)) / den
+          undefinedCos ||= den == 0.0 || cos.isNaN
+          buf += ((cos, nid))
         }
       }
     }

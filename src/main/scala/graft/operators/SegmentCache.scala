@@ -110,15 +110,17 @@ private[graft] object SegmentCache {
   /** Estimated heap bytes of all cached entries. */
   def cachedBytes: Long = synchronized(totalBytes)
 
-  /** The rows of `key`'s data files, read in the driver (no Spark
-    * job), one array per row holding `cols` in order: a Long for an
-    * integral column, a String, an Array[Float] for ARRAY<FLOAT>
-    * (a null element reads as 0, as Spark's float kernels see it), or
-    * null. A column the files do not hold is the file's `col=value`
-    * partition directory value. Callers pass the types the files were
-    * written with ([[footerSchema]], or the family's fixed schema). */
-  def readRows(spark: SparkSession, key: Key,
-               cols: Seq[StructField]): Seq[Array[Any]] = {
+  /** Calls `f` with each row of `key`'s data files, read in the
+    * driver (no Spark job): one array per row holding `cols` in order —
+    * a Long for an integral column, a String, an Array[Float] for
+    * ARRAY<FLOAT> (a null element reads as 0, as Spark's float kernels
+    * see it), or null. A column the files do not hold is the file's
+    * `col=value` partition directory value. Callers pass the types the
+    * files were written with ([[footerSchema]], or the family's fixed
+    * schema), and fold each row into their compact entry as it comes:
+    * a segment's boxed rows are never all live at once. */
+  def foreachRow(spark: SparkSession, key: Key, cols: Seq[StructField])
+                (f: Array[Any] => Unit): Unit = {
     import org.apache.parquet.example.data.Group
     import org.apache.parquet.hadoop.ParquetReader
     import org.apache.parquet.hadoop.example.GroupReadSupport
@@ -144,7 +146,7 @@ private[graft] object SegmentCache {
         case t => throw new IllegalArgumentException(
           s"no driver read for ${c.name}: $t")
       }
-    key.files.flatMap { name =>
+    key.files.foreach { name =>
       val parts = name.split("/").dropRight(1).flatMap(_.split("=", 2) match {
         case Array(k, v) => Some(k -> v)
         case _ => None
@@ -152,18 +154,16 @@ private[graft] object SegmentCache {
       val r = ParquetReader.builder(new GroupReadSupport(),
         new Path(s"${key.path}/$name")).withConf(conf).build()
       try {
-        val rows = Seq.newBuilder[Array[Any]]
         var g = r.read()
         while (g != null) {
-          rows += cols.map { c =>
+          f(cols.map { c =>
             if (g.getType.containsField(c.name)) value(g, c)
             else parts.get(c.name)
               .filter(_ != "__HIVE_DEFAULT_PARTITION__")
               .map(v => v.toLong: Any).orNull
-          }.toArray
+          }.toArray)
           g = r.read()
         }
-        rows.result()
       } finally r.close()
     }
   }

@@ -780,10 +780,11 @@ object TermIndex {
    * equal to [[Terms.bm25TopK]] over the same corpus.
    *
    * A version whose manifest holds at most [[SnapshotMaxTokens]]
-   * tokens is served from driver-side snapshots of its segments
+   * tokens, probed by a batch that walks at most [[SnapshotMaxWalk]]
+   * postings, is served from driver-side snapshots of its segments
    * ([[localProbe]]): no Spark job once its segments are cached,
-   * beyond at most one small collect of the probe tokens. Larger
-   * versions run the Spark scan, [[topKAtScan]]. Both apply the same
+   * beyond one collect of the probe tokens. Larger versions and
+   * batches run the Spark scan, [[topKAtScan]]. Both apply the same
    * probe-cost gate and return the same rows.
    */
   def topKAt(spark: SparkSession, dir: String, version: Int,
@@ -1315,19 +1316,38 @@ object TermIndex {
   }
 
   // ------------------------------------------------------------------
-  // Probe snapshots: versions up to SnapshotMaxTokens are scored in the
-  // driver from cached per-segment tf rows (SegmentCache).
+  // Probe snapshots: versions up to SnapshotMaxTokens, probed by batches
+  // up to SnapshotMaxWalk, are scored in the driver from cached
+  // per-segment tf rows (SegmentCache).
   // ------------------------------------------------------------------
 
   /** Largest version, by Σ manifest nTokens (a bound on its posting
     * rows), that [[topKAt]] scores from driver-side segment snapshots.
-    * At ~24 B a posting plus per-term overhead, a version at the bound
-    * snapshots to well under [[SegmentCache]]'s byte bound. */
+    * Measured with graft.ProbeSnapshotBound (sf0.1 documents × 7,
+    * 1.86–1.89M tokens, 4 cores): the snapshots retained 19 MB of heap
+    * for unigram terms and 42 MB for bigram terms, and took 2.0–2.5 s
+    * and 2.7–3.6 s to load; 42 MB is a third of [[SegmentCache]]'s
+    * byte bound. */
   private val SnapshotMaxTokens = 1L << 21
+
+  /** Most posting rows a batch may walk ([[LocalProbe.walk]]) and
+    * still be scored in the driver; larger batches run the scan. On the
+    * index above the driver beat the scan on every batch measured, up
+    * to 27.5M walked bigram postings (7.3–8.1 s against 25–32 s) and 163M
+    * unigram ones (12.8 s against 102 s); the bound sits just above the
+    * largest bigram walk measured, the slower shape per posting. */
+  private val SnapshotMaxWalk = 1L << 25
 
   /** One segment's tf rows of one term, as parallel arrays. */
   private final class Postings(val docId: Array[Long], val tf: Array[Long],
                                val dl: Array[Long])
+
+  private final class PostingsBuilder {
+    val docId, tf, dl = Array.newBuilder[Long]
+    def add(d: Long, t: Long, l: Long): Unit = { docId += d; tf += t; dl += l }
+    def result(): Postings =
+      new Postings(docId.result(), tf.result(), dl.result())
+  }
 
   /** One segment's tf rows by term, loaded once per segment in one
     * schema-pinned driver read. None when a row has a null doc id, tf
@@ -1336,19 +1356,22 @@ object TermIndex {
                          seg: String): Option[Map[String, Postings]] = {
     val key = SegmentCache.keyOf(fs(spark, dir), s"${segPath(dir, seg)}/tf")
     SegmentCache.getOrLoad(key) {
-      val rows = SegmentCache.readRows(spark, key,
-        Seq("tok", "doc_id", "tf", "dl").map(tfSchema(_)))
-      if (rows.exists(r => r(1) == null || r(2) == null || r(3) == null))
-        (None, 0L)
-      else {
-        def longs(rs: Seq[Array[Any]], i: Int): Array[Long] =
-          rs.map(_(i).asInstanceOf[Long]).toArray
+      val byTok = scala.collection.mutable.HashMap
+        .empty[String, PostingsBuilder]
+      var nulls = false
+      SegmentCache.foreachRow(spark, key,
+          Seq("tok", "doc_id", "tf", "dl").map(tfSchema(_))) { r =>
+        if (r(1) == null || r(2) == null || r(3) == null) nulls = true
         // a null term joins no probe term
-        val byTok = rows.filter(_(0) != null).groupBy(_(0).asInstanceOf[String])
-          .map { case (t, rs) =>
-            t -> new Postings(longs(rs, 1), longs(rs, 2), longs(rs, 3))
-          }
-        (Some(byTok), byTok.iterator.map { case (t, p) =>
+        else if (r(0) != null)
+          byTok.getOrElseUpdate(r(0).asInstanceOf[String],
+            new PostingsBuilder).add(r(1).asInstanceOf[Long],
+            r(2).asInstanceOf[Long], r(3).asInstanceOf[Long])
+      }
+      if (nulls) (None, 0L)
+      else {
+        val m = byTok.iterator.map { case (t, b) => t -> b.result() }.toMap
+        (Some(m), m.iterator.map { case (t, p) =>
           120L + 2L * t.length + 24L * p.docId.length }.sum)
       }
     }
@@ -1361,14 +1384,19 @@ object TermIndex {
     val key = SegmentCache.keyOf(fs(spark, dir), tombPath(dir, name))
     SegmentCache.getOrLoad(key) {
       val coalesced = name.startsWith("c")
-      val m = SegmentCache.readRows(spark, key,
+      val m = scala.collection.mutable.LongMap.empty[Int]
+      SegmentCache.foreachRow(spark, key,
           StructField("doc_id", LongType) +:
-            (if (coalesced) Seq(StructField("seq", IntegerType)) else Nil))
-        .filter(r => r.forall(_ != null))
-        .groupMapReduce(_(0).asInstanceOf[Long])(r =>
-          if (coalesced) r(1).asInstanceOf[Long].toInt else nameSeq(name))(
-          math.max)
-      (m, 64L + 64L * m.size)
+            (if (coalesced) Seq(StructField("seq", IntegerType)) else Nil)) {
+        r =>
+          if (r.forall(_ != null)) {
+            val d = r(0).asInstanceOf[Long]
+            val q = if (coalesced) r(1).asInstanceOf[Long].toInt
+              else nameSeq(name)
+            m(d) = math.max(q, m.getOrElse(d, q))
+          }
+      }
+      (m.toMap, 64L + 64L * m.size)
     }
   }
 
@@ -1390,15 +1418,18 @@ object TermIndex {
       probes.groupBy(p => Option(p._1)).toSeq
         .map { case (pid, ps) => (pid.orNull, ps.map(_._2)) }
 
-    /** The probe-cost gate's price: stored df (every posting row,
-      * masked or not — what the df tables hold) against the masked n. */
+    /** Stored df of each probe term: every posting row, masked or not
+      * — what the df tables hold. */
+    private lazy val storedDf: Map[String, Long] = vocab.map { t =>
+      t -> segs.map(_._2.get(t).fold(0L)(_.docId.length.toLong)).sum
+    }.toMap
+
+    /** The probe-cost gate's price: stored df against the masked n. */
     lazy val cost: ProbeCost =
       if (vocab.isEmpty) ProbeCost(0L, 0L, 0L, n)
       else {
-        val priced = vocab.flatMap { t =>
-          val df = segs.map(_._2.get(t).fold(0L)(_.docId.length.toLong)).sum
-          if (df > 0 && Terms.bm25Idf(n, df) >= 1) Some(t -> df) else None
-        }.toMap
+        val priced = storedDf.filter { case (_, df) =>
+          df > 0 && Terms.bm25Idf(n, df) >= 1 }
         val ws = byProbe.map { case (_, rows) =>
           rows.iterator.flatten.map(priced.getOrElse(_, 0L))
             .foldLeft(0L)(java.lang.Math.addExact)
@@ -1407,29 +1438,39 @@ object TermIndex {
           (0L +: ws).max, byProbe.length.toLong, n)
       }
 
-    /** Live postings of each probe term: (doc_id, tf, dl) rows that no
-      * tombstone with a strictly greater sequence masks. */
-    private lazy val live: Map[String, Seq[(Long, Long, Long)]] =
+    /** Posting rows [[topK]] walks, one thread: Σ over probe rows of
+      * the stored df of each of their terms, zero-idf terms included
+      * (the scan elides those; this path does not). */
+    lazy val walk: Long = probes.iterator.flatMap(_._2).map(storedDf)
+      .foldLeft(0L)(java.lang.Math.addExact)
+
+    /** Live postings of each probe term: the rows that no tombstone
+      * with a strictly greater sequence masks. */
+    private lazy val live: Map[String, Postings] =
       vocab.flatMap { t =>
-        val ps = segs.flatMap { case (seq, byTok) =>
-          byTok.get(t).toSeq.flatMap { p =>
-            p.docId.indices.collect {
-              case i if masks.get(p.docId(i)).forall(_ <= seq) =>
-                (p.docId(i), p.tf(i), p.dl(i))
-            }
-          }
-        }
-        if (ps.isEmpty) None else Some(t -> ps)
+        val b = new PostingsBuilder
+        for ((seq, byTok) <- segs; p <- byTok.get(t); i <- p.docId.indices)
+          if (masks.get(p.docId(i)).forall(_ <= seq))
+            b.add(p.docId(i), p.tf(i), p.dl(i))
+        val ps = b.result()
+        if (ps.docId.isEmpty) None else Some(t -> ps)
       }.toMap
 
     /** (probe_id, rank, doc_id, score) rows, rank 1..k per probe. */
     def topK(k: Int): Seq[org.apache.spark.sql.Row] = {
-      val idf = live.map { case (t, ps) => t -> Terms.bm25Idf(n, ps.length) }
+      val idf = live.map { case (t, ps) => t -> Terms.bm25Idf(n, ps.docId.length) }
       byProbe.flatMap { case (pid, rows) =>
-        val score = scala.collection.mutable.HashMap.empty[Long, Long]
-        for (toks <- rows; t <- toks; i <- idf.get(t); (d, tf, dl) <- live(t))
-          score(d) = java.lang.Math.addExact(score.getOrElse(d, 0L),
-            Terms.bm25Partial(i, tf, dl, n, tt))
+        val score = scala.collection.mutable.LongMap.empty[Long]
+        for (toks <- rows; t <- toks; i <- idf.get(t)) {
+          val ps = live(t)
+          var j = 0
+          while (j < ps.docId.length) {
+            val d = ps.docId(j)
+            score(d) = java.lang.Math.addExact(score.getOrElse(d, 0L),
+              Terms.bm25Partial(i, ps.tf(j), ps.dl(j), n, tt))
+            j += 1
+          }
+        }
         score.toSeq
           .sortWith((a, b) => a._2 > b._2 || (a._2 == b._2 && a._1 < b._1))
           .take(k).zipWithIndex.map { case ((d, sc), r) =>
@@ -1450,13 +1491,14 @@ object TermIndex {
   /** The snapshot of `version` with `probes` collected, or None when
     * [[topKAt]] must scan instead: the manifest holds more than
     * [[SnapshotMaxTokens]] tokens, the probe id is not an integral or
-    * string column (whose grouping the driver reproduces exactly), or
-    * a segment has null tf fields. The caller checks the version is
-    * live. */
+    * string column (whose grouping the driver reproduces exactly), a
+    * segment has null tf fields, or the batch walks more than
+    * `maxWalk` postings. The caller checks the version is live. */
   private[graft] def localProbe(spark: SparkSession, dir: String,
                                 version: Int, probes: DataFrame,
                                 id: String, text: String, cfg: Config,
-                                terms: Column => Column)
+                                terms: Column => Column,
+                                maxWalk: Long = SnapshotMaxWalk)
       : Option[LocalProbe] = {
     requireTerms(spark, dir, cfg)
     val segs = readManifest(spark, dir, version)
@@ -1477,6 +1519,7 @@ object TermIndex {
     Some(new LocalProbe(probeField, batch,
       segs.map(_._2).sum - masked._1, segs.map(_._3).sum - masked._2,
       segs.map(s => nameSeq(s._1)).zip(tfs.flatten), masks))
+      .filter(_.walk <= maxWalk)
   }
 
   /** Drop versions older than the last `retainLast` and any segment

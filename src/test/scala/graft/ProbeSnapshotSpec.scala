@@ -70,6 +70,11 @@ class ProbeSnapshotSpec extends AnyFunSuite {
     val lp = TermIndex.localProbe(spark, dir, v, probes, "doc_id", "text",
       exact, TF.tokens)
     assert(lp.isDefined, s"v$v: snapshot declined")
+    // a batch is scored in the driver up to its walk bound, no further
+    def walkBound(w: Long) = TermIndex.localProbe(spark, dir, v, probes,
+      "doc_id", "text", exact, TF.tokens, w)
+    assert(walkBound(lp.get.walk).isDefined)
+    assert(walkBound(lp.get.walk - 1).isEmpty)
     val scan = termRows(TermIndex.topKAtScan(spark, dir, v, probes,
       "doc_id", "text", K, exact))
     assert(scan.nonEmpty)
@@ -100,6 +105,8 @@ class ProbeSnapshotSpec extends AnyFunSuite {
     for (nProbe <- nProbes) {
       assert(IvfIndex.localTopK(spark, dir, v, q, "doc_id", "embedding", K,
         nProbe).isDefined, s"v$v: snapshot declined")
+      assert(IvfIndex.localTopK(spark, dir, v, q, "doc_id", "embedding", K,
+        nProbe, maxWalk = 0L).isEmpty, s"v$v: walk bound ignored")
       val scan = ivfRows(IvfIndex.topKAtScan(spark, dir, v, q, "doc_id",
         "embedding", K, nProbe))
       assert(scan.nonEmpty)

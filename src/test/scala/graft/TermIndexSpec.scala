@@ -126,6 +126,8 @@ class TermIndexSpec extends AnyFunSuite {
     val wantS = Terms.bm25TopK(docs240, prShort, "doc_id", "text", 5)
     assert(rows(gotS) === rows(wantS))
     val (okS, fbS) = TermIndex.lastMaxScoreDecision
+    assert(rows(TermIndex.topK(spark, dir, prShort, "doc_id", "text", 5,
+      cfg)) === rows(wantS))
     assert(okS == 2, s"the rare-term probes must prune via tier 1: ok=$okS fb=$fbS")
     assert(fbS == 1, s"the all-common probe must fall back: ok=$okS fb=$fbS")
     // (b) a document-shaped probe present (17 distinct terms > the
@@ -141,6 +143,8 @@ class TermIndexSpec extends AnyFunSuite {
     val want = Terms.bm25TopK(docs240, pr, "doc_id", "text", 5)
     assert(rows(got) === rows(want))
     val (ok, fb) = TermIndex.lastMaxScoreDecision
+    assert(rows(TermIndex.topK(spark, dir, pr, "doc_id", "text", 5,
+      cfg)) === rows(want))
     assert(ok == 3, s"three probes must prune via fast tier 2: ok=$ok fb=$fb")
     assert(fb == 1, s"the all-common probe must fall back: ok=$ok fb=$fb")
     // tombstones outstanding: pruning must STILL engage (stats counted
@@ -154,6 +158,8 @@ class TermIndexSpec extends AnyFunSuite {
     val wantM = Terms.bm25TopK(reduced, pr, "doc_id", "text", 5)
     assert(rows(gotM) === rows(wantM))
     val (okM, fbM) = TermIndex.lastMaxScoreDecision
+    assert(rows(TermIndex.topK(spark, dir, pr, "doc_id", "text", 5,
+      cfg)) === rows(wantM))
     assert(okM >= 3, s"masked probes must still prune: ok=$okM fb=$fbM")
     spark.catalog.clearCache()
   }
