@@ -1,5 +1,6 @@
 package graft
 
+import graft.io.{LocalFs, ParquetFooters}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
@@ -10,8 +11,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object GraftSession {
 
   /**
-   * Generated-code reuse, paid for out of the status store. Both
-   * [[local]] and [[scaleConf]] apply it.
+   * Settings both [[local]] and [[scaleConf]] apply.
+   *
+   * Generated-code reuse, paid for out of the status store:
    *
    *  - `spark.sql.codegen.cache.maxEntries` 1024 (Spark's default is
    *    100): the JVM-wide LRU of janino-compiled classes must hold the
@@ -31,14 +33,18 @@ object GraftSession {
    *    store, whose defaults keep 1000 jobs, 1000 stages, 100k tasks
    *    per stage and 1000 SQL executions alive. With all three
    *    settings the live heap after a benchmark run rose 2-5%.
+   *
+   * Persisted reads and writes fork no process: Hadoop's `file:`
+   * filesystem, for both `FileSystem` and `FileContext`, is
+   * [[graft.io.LocalFs]].
    */
-  private[graft] val codegenConf: Map[String, String] = Map(
+  private[graft] val sharedConf: Map[String, String] = Map(
     "spark.sql.codegen.cache.maxEntries" -> "1024",
     "spark.sql.codegen.useIdInClassName" -> "false",
     "spark.ui.retainedJobs" -> "50",
     "spark.ui.retainedStages" -> "50",
     "spark.ui.retainedTasks" -> "1000",
-    "spark.sql.ui.retainedExecutions" -> "50")
+    "spark.sql.ui.retainedExecutions" -> "50") ++ LocalFs.conf
 
   /**
    * Conf block for a REAL cluster at the 100 TB design point (e.g.
@@ -74,7 +80,7 @@ object GraftSession {
     // or'd-equals / parquet-IN form that prunes row groups by stats is
     // only chosen up to this threshold (default 10)
     "spark.sql.parquet.pushdown.inFilterThreshold" -> "512",
-    "spark.sql.session.timeZone" -> "UTC") ++ codegenConf
+    "spark.sql.session.timeZone" -> "UTC") ++ sharedConf
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val spark = SparkSession.builder()
@@ -90,7 +96,7 @@ object GraftSession {
       // the corpus's events.ts is TIMESTAMP(NANOS), which Spark 4 only
       // reads as long; Tables.load converts it back to a timestamp.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config(codegenConf)
+      .config(sharedConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
@@ -103,7 +109,7 @@ object Tables {
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, table: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$table.parquet")
+    val df = ParquetFooters.read(spark, s"$sfDir/$table.parquet")
     // events.ts normalizes to TimestampType whatever the generator
     // wrote: TIMESTAMP(NANOS) parquet arrives as a long under
     // spark.sql.legacy.parquet.nanosAsLong (convert with exact integer

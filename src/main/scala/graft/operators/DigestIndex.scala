@@ -2,6 +2,7 @@ package graft.operators
 
 import java.io.ByteArrayOutputStream
 
+import graft.io.ParquetFooters
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
 import org.apache.spark.sql.graft.shims
@@ -264,7 +265,7 @@ object DigestIndex {
                         tombs: Seq[String]): Option[DataFrame] =
     if (tombs.isEmpty) None
     else Some(tombs.map { t =>
-        val raw = spark.read.parquet(tombPath(dir, t))
+        val raw = ParquetFooters.read(spark, tombPath(dir, t))
         if (t.startsWith("c"))
           raw.select(col("id").as("t_id"), col("seq").as("t_seq"))
         else
@@ -290,7 +291,7 @@ object DigestIndex {
         .write.mode("overwrite").parquet(tombPath(dir, cName))
       // an all-pruned coalesce writes an empty dataset: drop it from
       // the manifest entirely (nothing left to mask)
-      if (spark.read.parquet(tombPath(dir, cName)).isEmpty) Seq.empty
+      if (ParquetFooters.count(spark, tombPath(dir, cName)) == 0) Seq.empty
       else Seq(cName)
     }
 
@@ -450,7 +451,7 @@ object DigestIndex {
         val d = f"d${v + 1}%05d$fx"
         val distinctIds = ids.select(col("id")).distinct()
         distinctIds.write.mode("overwrite").parquet(tombPath(dir, d))
-        val nTomb = spark.read.parquet(tombPath(dir, d)).count()
+        val nTomb = ParquetFooters.count(spark, tombPath(dir, d))
         if (nTomb > 0) Some(d)
         else { fs(spark, dir).delete(new Path(tombPath(dir, d)), true); None }
       }

@@ -3,6 +3,7 @@ package graft.operators
 import scala.jdk.CollectionConverters._
 
 import graft.functions.VectorExpressions.{dotF, normF}
+import graft.io.ParquetFooters
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -423,7 +424,7 @@ object IvfIndex {
       val dName = f"d${v + 1}%05d${VersionedLayout.fence(dir, v + 1)}"
       ids.select(col(idCol).as("id")).distinct()
         .write.mode("overwrite").parquet(tombPath(dir, dName))
-      val n = spark.read.parquet(tombPath(dir, dName)).count()
+      val n = ParquetFooters.count(spark, tombPath(dir, dName))
       val tombs = readTombstones(spark, dir, v)
       writeManifest(spark, dir, v + 1, readCentroids(spark, dir, v),
         readSegments(spark, dir, v), readCounts(spark, dir, v),
@@ -455,7 +456,7 @@ object IvfIndex {
                         tombs: Seq[String]): Option[DataFrame] =
     if (tombs.isEmpty) None
     else Some(tombs.map { d =>
-        val raw = spark.read.parquet(tombPath(dir, d))
+        val raw = ParquetFooters.read(spark, tombPath(dir, d))
         val scoped = raw.columns.contains("list_id")
         if (d.startsWith("c")) {
           if (scoped)
@@ -513,7 +514,7 @@ object IvfIndex {
     * (tombstones with a strictly greater sequence applied). */
   private def liveUnion(spark: SparkSession, dir: String, segs: Seq[String],
                         tombs: Seq[String], idCol: String): DataFrame = {
-    val u = segs.map(s => spark.read.parquet(segPath(dir, s))
+    val u = segs.map(s => ParquetFooters.read(spark, segPath(dir, s))
         .withColumn("seg_seq", lit(nameSeq(s))))
       .reduce(_.unionByName(_))
     tombFrame(spark, dir, tombs) match {
@@ -601,7 +602,7 @@ object IvfIndex {
             .as("id")))
           (batchIds.toSeq ++ dels.toSeq).reduce(_.unionByName(_)).distinct()
             .write.mode("overwrite").parquet(tombPath(dir, dName))
-          spark.read.parquet(tombPath(dir, dName)).count()
+          ParquetFooters.count(spark, tombPath(dir, dName))
         }
       val tombs = if (nTomb > 0) tombsPrev :+ dName else tombsPrev
       val mergedPre = (prev.keySet ++ preCounts.keySet).iterator
@@ -875,7 +876,7 @@ object IvfIndex {
           else "lacks"} a PQ layer but cfg.pq is ${cfg.pq}")
       val segs = readSegments(spark, dir, v)
       require(segs.nonEmpty, s"nothing to retrain at $dir")
-      val schema = spark.read.parquet(segPath(dir, segs.head)).schema
+      val schema = ParquetFooters.read(spark, segPath(dir, segs.head)).schema
       val (idCol, vecCol) = (schema.fields(0).name, schema.fields(1).name)
       val tombs = readTombstones(spark, dir, v)
       val all = liveUnion(spark, dir, segs, tombs, idCol)
@@ -904,7 +905,7 @@ object IvfIndex {
     withClaim(spark, dir, v + 1, FormatVersion, "IvfIndex") {
       val segs = readSegments(spark, dir, v)
       require(segs.nonEmpty, s"nothing to compact at $dir")
-      val schema = spark.read.parquet(segPath(dir, segs.head)).schema
+      val schema = ParquetFooters.read(spark, segPath(dir, segs.head)).schema
       val idCol = schema.fields.head.name
       val tombs = readTombstones(spark, dir, v)
       val comp = f"r${v + 1}%05d${VersionedLayout.fence(dir, v + 1)}"
@@ -1106,7 +1107,7 @@ object IvfIndex {
     // own id's tombstone)
     def scan(cols: Seq[String]): DataFrame = {
       val u = segsV
-        .map(s => spark.read.parquet(segPath(dir, s))
+        .map(s => ParquetFooters.read(spark, segPath(dir, s))
           .filter(col("list_id").isin(probedLists: _*))
           .select(cols.map(col) :+ lit(nameSeq(s)).as("seg_seq"): _*))
         .reduce(_.unionByName(_))
@@ -1241,9 +1242,9 @@ object IvfIndex {
                                  val lists: Map[Int, ListRows])
 
   /** A tombstone dataset: list-global masks (id → sequence) and
-    * list-scoped ones ((id, list) → sequence), the max per key. */
+    * list-scoped ones (list → id → sequence), the max per key. */
   private final class VecTombs(val global: Map[Long, Int],
-                               val scoped: Map[(Long, Int), Int])
+                               val scoped: Map[Int, Map[Long, Int]])
 
   private def integral(t: DataType): Boolean = t match {
     case ByteType | ShortType | IntegerType | LongType => true
@@ -1270,7 +1271,7 @@ object IvfIndex {
     val key = SegmentCache.keyOf(fs(spark, dir), segPath(dir, seg))
     SegmentCache.getOrLoad(key) {
       // a partitioned segment's files do not hold list_id
-      val schema = SegmentCache.footerSchema(spark, key).map(s =>
+      val schema = keySchema(spark, key).map(s =>
         if (s.fieldNames.contains("list_id")) s
         else s.add("list_id", IntegerType))
         .filter(s => s.fieldNames.contains(id) && s.fieldNames.contains(vec) &&
@@ -1319,7 +1320,7 @@ object IvfIndex {
                               name: String): Option[VecTombs] = {
     val key = SegmentCache.keyOf(fs(spark, dir), tombPath(dir, name))
     SegmentCache.getOrLoad(key) {
-      SegmentCache.footerSchema(spark, key) match {
+      keySchema(spark, key) match {
         case None => (Some(new VecTombs(Map.empty, Map.empty)), 64L)
         case Some(sc) if !sc.fieldNames.contains("id") ||
             !integral(sc("id").dataType) => (None, 0L)
@@ -1329,7 +1330,8 @@ object IvfIndex {
             .map(sc(_))
           val names = cols.map(_.name)
           val global = scala.collection.mutable.LongMap.empty[Int]
-          val scoped = scala.collection.mutable.HashMap.empty[(Long, Int), Int]
+          val scoped = scala.collection.mutable.HashMap
+            .empty[Int, scala.collection.mutable.LongMap[Int]]
           var n = 0L
           SegmentCache.foreachRow(spark, key, cols) { r =>
             val v = names.zip(r).toMap
@@ -1341,14 +1343,69 @@ object IvfIndex {
               v.getOrElse("list_id", null) match {
                 case null => global(i) = math.max(s, global.getOrElse(i, s))
                 case l =>
-                  val k = (i, l.asInstanceOf[Long].toInt)
-                  scoped(k) = math.max(s, scoped.getOrElse(k, s))
+                  val m = scoped.getOrElseUpdate(l.asInstanceOf[Long].toInt,
+                    scala.collection.mutable.LongMap.empty[Int])
+                  m(i) = math.max(s, m.getOrElse(i, s))
               }
             }
           }
-          (Some(new VecTombs(global.toMap, scoped.toMap)), 64L + 96L * n)
+          (Some(new VecTombs(global.toMap,
+            scoped.view.mapValues(_.toMap).toMap)), 64L + 96L * n)
       }
     }
+  }
+
+  /** The schema of the first data file of `key`; None when it has none. */
+  private def keySchema(spark: SparkSession,
+                        key: SegmentCache.Key): Option[StructType] =
+    key.files.headOption.map(n =>
+      ParquetFooters.fileSchema(spark, new Path(s"${key.path}/$n")))
+
+  /** The `k` best (cosine, neighbor id) candidates offered, in the order
+    * the scan ranks them: cosine descending, then neighbor id; -0.0 and
+    * 0.0 compare equal, as in Spark's ordering, and of two equal
+    * candidates the first offered ranks first. A binary heap with the
+    * worst kept candidate at its root. */
+  private final class TopK(k: Int) {
+    private val cos = new Array[Double](k)
+    private val ids = new Array[Long](k)
+    private val order = new Array[Long](k)
+    private var n = 0
+    private var offered = 0L
+
+    // candidate a ranks before candidate b
+    private def before(i: Int, j: Int): Boolean =
+      cos(i) > cos(j) || (cos(i) == cos(j) &&
+        (ids(i) < ids(j) || (ids(i) == ids(j) && order(i) < order(j))))
+
+    private def swap(i: Int, j: Int): Unit = {
+      val c = cos(i); cos(i) = cos(j); cos(j) = c
+      val d = ids(i); ids(i) = ids(j); ids(j) = d
+      val o = order(i); order(i) = order(j); order(j) = o
+    }
+
+    def offer(c: Double, id: Long): Unit = {
+      offered += 1
+      if (n < k) {
+        cos(n) = c; ids(n) = id; order(n) = offered
+        var i = n
+        n += 1
+        while (i > 0 && before((i - 1) / 2, i)) { swap(i, (i - 1) / 2); i = (i - 1) / 2 }
+      } else if (k > 0 && (c > cos(0) || (c == cos(0) && id < ids(0)))) {
+        cos(0) = c; ids(0) = id; order(0) = offered
+        var i = 0
+        var done = false
+        while (!done) {
+          val l = 2 * i + 1
+          val w = if (l + 1 < n && before(l, l + 1)) l + 1 else l
+          if (l < n && before(i, w)) { swap(i, w); i = w } else done = true
+        }
+      }
+    }
+
+    /** The kept candidates, best first. */
+    def ranked: Seq[(Double, Long)] =
+      (0 until n).sortWith(before).map(i => (cos(i), ids(i)))
   }
 
   /** [[topKAt]]'s rows and schema scored in the driver from segment
@@ -1394,12 +1451,25 @@ object IvfIndex {
       .map(vecTombSnapshot(spark, dir, _))
     if (tombs.exists(_.isEmpty)) return None
     val global = SegmentCache.maxMerge(tombs.flatten.map(_.global))
-    val scoped = SegmentCache.maxMerge(tombs.flatten.map(_.scoped))
+    val scoped = tombs.flatten.flatMap(_.scoped.keys).distinct.map(l =>
+      l -> SegmentCache.maxMerge(tombs.flatten.flatMap(_.scoped.get(l)))).toMap
     val segRows = segs.map(nameSeq).zip(snaps.flatten)
-    // (cos, neighbor id) candidates per query id; rows sharing an id
-    // pool their candidates, as the scan's window partition does
-    val byQuery = scala.collection.mutable.LinkedHashMap
-      .empty[Any, scala.collection.mutable.ArrayBuffer[(Double, Long)]]
+    // the masks do not depend on the query: each probed list's live rows,
+    // per segment, are found once for the batch
+    val live = scala.collection.mutable.LongMap.empty[Array[(ListRows, Array[Int])]]
+    def liveRows(l: Int): Array[(ListRows, Array[Int])] =
+      live.getOrElseUpdate(l, {
+        val sc = scoped.getOrElse(l, Map.empty[Long, Int])
+        segRows.flatMap { case (seq, sg) =>
+          sg.lists.get(l).map(lr => lr -> lr.ids.indices.filter { i =>
+            val nid = lr.ids(i)
+            global.getOrElse(nid, seq) <= seq && sc.getOrElse(nid, seq) <= seq
+          }.toArray)
+        }.toArray
+      })
+    // the k best candidates per query id; rows sharing an id pool their
+    // candidates, as the scan's window partition does
+    val byQuery = scala.collection.mutable.LinkedHashMap.empty[Any, TopK]
     // a zero-norm pair divides by zero and a NaN cosine sorts first in
     // Spark: such probes are left to the scan
     var undefinedCos = false
@@ -1407,17 +1477,19 @@ object IvfIndex {
       val q = r.get(0).asInstanceOf[Number].longValue
       val qv = r.getSeq[Number](1).map(_.floatValue).toArray
       val qn = math.sqrt(floatDot(qv, qv))
-      val buf = byQuery.getOrElseUpdate(r.get(0),
-        scala.collection.mutable.ArrayBuffer.empty)
-      for (l <- lists; (seq, sg) <- segRows; lr <- sg.lists.get(l);
-           i <- lr.ids.indices) {
-        val nid = lr.ids(i)
-        if (nid != q && !global.get(nid).exists(_ > seq) &&
-          !scoped.get((nid, l)).exists(_ > seq)) {
-          val den = qn * lr.norms(i)
-          val cos = floatDot(qv, lr.vecs(i)) / den
-          undefinedCos ||= den == 0.0 || cos.isNaN
-          buf += ((cos, nid))
+      val best = byQuery.getOrElseUpdate(r.get(0), new TopK(k))
+      for (l <- lists; (lr, rows) <- liveRows(l)) {
+        var j = 0
+        while (j < rows.length) {
+          val i = rows(j)
+          val nid = lr.ids(i)
+          if (nid != q) {
+            val den = qn * lr.norms(i)
+            val cos = floatDot(qv, lr.vecs(i)) / den
+            undefinedCos ||= den == 0.0 || cos.isNaN
+            best.offer(cos, nid)
+          }
+          j += 1
         }
       }
     }
@@ -1429,12 +1501,10 @@ object IvfIndex {
       case IntegerType => _.toInt
       case _ => identity
     }
-    val rows = byQuery.toSeq.flatMap { case (qid, cands) =>
-      // -0.0 and 0.0 compare equal, as in Spark's ordering
-      cands.sortWith((a, b) => a._1 > b._1 || (a._1 == b._1 && a._2 < b._2))
-        .take(k).zipWithIndex.map { case ((cos, nid), i) =>
-          Row(qid, i + 1, toId(nid), cos)
-        }
+    val rows = byQuery.toSeq.flatMap { case (qid, best) =>
+      best.ranked.zipWithIndex.map { case ((cos, nid), i) =>
+        Row(qid, i + 1, toId(nid), cos)
+      }
     }
     Some((StructType(Seq(qField.copy(name = "query_id"),
       StructField("rnk", IntegerType, nullable = false),

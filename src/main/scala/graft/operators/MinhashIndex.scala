@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.MinhashFunctions.minhashSigF
+import graft.io.ParquetFooters
 import graft.sources.Bucketing
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -168,7 +169,7 @@ object MinhashIndex {
     else {
       if (handles.size > 4096) // purge dead refs before growing further
         handles.entrySet.removeIf(_.getValue.get() == null)
-      val fresh = spark.read.parquet(path)
+      val fresh = ParquetFooters.read(spark, path)
       handles.put(k, new java.lang.ref.WeakReference(fresh))
       fresh
     }
@@ -195,7 +196,7 @@ object MinhashIndex {
   private def cachedCount(spark: SparkSession, path: String): Long = {
     if (handleCounts.size > 4096) handleCounts.clear()
     handleCounts.computeIfAbsent(handleKey(spark, path),
-      _ => cachedRead(spark, path).count())
+      _ => ParquetFooters.count(spark, path))
   }
 
   /** The bands table, catalog-registered CLUSTERED BY (band, bucket) so
@@ -217,7 +218,7 @@ object MinhashIndex {
       // band table for that probe
       bandsCreateLock.synchronized {
         if (!spark.catalog.tableExists(t)) {
-          val cols = spark.read.parquet(path).schema.fields
+          val cols = ParquetFooters.read(spark, path).schema.fields
             .map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
           spark.sql(s"CREATE TABLE `$t` ($cols) USING parquet " +
             s"CLUSTERED BY (band, bucket) SORTED BY (band, bucket) " +
@@ -231,7 +232,7 @@ object MinhashIndex {
       // transient catalog failure: fall back for THIS probe only — a
       // cached fallback would silently demote every later probe of the
       // version to an unbucketed (re-shuffled) band join
-      case scala.util.control.NonFatal(_) => spark.read.parquet(path)
+      case scala.util.control.NonFatal(_) => ParquetFooters.read(spark, path)
     }
   }
 
@@ -744,7 +745,7 @@ object MinhashIndex {
     p.newDocs.write.mode("overwrite").parquet(s"$vd/docs")
     p.newDf.write.mode("overwrite").parquet(s"$vd/df")
     p.newHot.write.mode("overwrite").parquet(s"$vd/hot")
-    spark.read.parquet(s"$vd/df").filter(col("df") > warmThreshold(cfg))
+    ParquetFooters.read(spark, s"$vd/df").filter(col("df") > warmThreshold(cfg))
       .write.mode("overwrite").parquet(s"$vd/warm")
     Bucketing.writeBucketedAt(p.newBands, bandsTableName(dir, v1),
       cfg.nBuckets, Seq("band", "bucket"), s"$vd/bands")
@@ -814,14 +815,14 @@ object MinhashIndex {
           (col("df") - coalesce(col("ddf"), lit(0L))).as("df"))
       warmCorr.filter(col("df") > warmThreshold(cfg))
         .write.mode("overwrite").parquet(s"$vd1/warm")
-      spark.read.parquet(s"$vd1/warm")
+      ParquetFooters.read(spark, s"$vd1/warm")
         .filter(col("df") > cfg.maxShingleDf).select("shingle")
         .write.mode("overwrite").parquet(s"$vd1/hot")
       // shingles that fell back UNDER the cap (tiny: subset of the old
       // hot set): live docs containing one regain it in their capped
       // sets — recompute exactly their band rows into the overlay
       val unHotArr = cachedRead(spark, s"$vd/hot")
-        .join(spark.read.parquet(s"$vd1/hot"), Seq("shingle"), "left_anti")
+        .join(ParquetFooters.read(spark, s"$vd1/hot"), Seq("shingle"), "left_anti")
         .collect().map(_.getString(0)).toSeq
       val liveDocs = st.docs.join(dels, col(id) === col("__tomb_id"), "left_anti")
       val overlayOld = st.overlay.map(
@@ -834,7 +835,7 @@ object MinhashIndex {
           .filter(arrays_overlap(col("sharr"),
             array(unHotArr.map(lit): _*))).persist()
         val hot1 = asOneRowArray(
-          spark.read.parquet(s"$vd1/hot"), "hotarr")
+          ParquetFooters.read(spark, s"$vd1/hot"), "hotarr")
         val recomputed = bandsOf(cappedBy(aff, id, hot1), id, cfg)
         val kept = overlayOld.map(
           _.join(broadcast(aff.select(col(id))), Seq(id), "left_anti"))

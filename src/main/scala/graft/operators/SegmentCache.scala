@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.io.ParquetFooters
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
@@ -41,21 +42,13 @@ private[graft] object SegmentCache {
   private var totalBytes = 0L
 
   /** The key of the directory `dir`: its qualified path and the
-    * relative names of the data files under it (metadata such as
-    * `_SUCCESS` and `.crc` sidecars skipped). Fails when `dir` is
-    * missing — a manifest never names a directory that is gone. */
+    * relative names of the data files under it, as Spark would list
+    * them ([[ParquetFooters.dataFiles]]). Fails when `dir` is missing —
+    * a manifest never names a directory that is gone. */
   def keyOf(f: FileSystem, dir: String): Key = {
     val root = f.makeQualified(new Path(dir))
     val prefix = root.toString.length + 1
-    val files = Seq.newBuilder[String]
-    val it = f.listFiles(root, true)
-    while (it.hasNext) {
-      val p = it.next().getPath
-      val n = p.getName
-      if (!n.startsWith("_") && !n.startsWith("."))
-        files += p.toString.substring(prefix)
-    }
-    Key(root.toString, files.result().sorted)
+    Key(root.toString, ParquetFooters.dataFiles(f, root).map(_.toString.substring(prefix)))
   }
 
   /** The cached value for `key`, or `load()`'s, which is then cached
@@ -116,8 +109,8 @@ private[graft] object SegmentCache {
     * ARRAY<FLOAT> (a null element reads as 0, as Spark's float kernels
     * see it), or null. A column the files do not hold is the file's
     * `col=value` partition directory value. Callers pass the types the
-    * files were written with ([[footerSchema]], or the family's fixed
-    * schema), and fold each row into their compact entry as it comes:
+    * files were written with ([[ParquetFooters.fileSchema]], or the
+    * family's fixed schema), and fold each row into their compact entry as it comes:
     * a segment's boxed rows are never all live at once. */
   def foreachRow(spark: SparkSession, key: Key, cols: Seq[StructField])
                 (f: Array[Any] => Unit): Unit = {
@@ -167,21 +160,4 @@ private[graft] object SegmentCache {
       } finally r.close()
     }
   }
-
-  /** The Spark schema that Spark wrote into the footer of the first
-    * data file of `key` (None when there is no data file, or the file
-    * was not written by Spark). A driver file read: no
-    * schema-inference job. */
-  def footerSchema(spark: SparkSession, key: Key): Option[StructType] =
-    key.files.headOption.flatMap { name =>
-      import org.apache.parquet.hadoop.ParquetFileReader
-      import org.apache.parquet.hadoop.util.HadoopInputFile
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new Path(s"${key.path}/$name"),
-        spark.sparkContext.hadoopConfiguration))
-      try Option(r.getFooter.getFileMetaData.getKeyValueMetaData
-          .get("org.apache.spark.sql.parquet.row.metadata"))
-        .map(DataType.fromJson(_).asInstanceOf[StructType])
-      finally r.close()
-    }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorExpressions.{dotF, normF}
+import graft.io.ParquetFooters
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -295,7 +296,7 @@ object Similarity {
         explode(bestListsArr(col(vec), dim, cents, nProbe)).as("list_id"))
     val probedLists = q.select("list_id").distinct()
       .collect().map(_.getInt(0)).toSeq
-    val c = spark.read.parquet(s"$dir/data")
+    val c = ParquetFooters.read(spark, s"$dir/data")
       .filter(col("list_id").isin(probedLists: _*))
       .select(col(id).as("neighbor_id"), col(vec).as("cv"), col("list_id"))
     val w = Window.partitionBy(col("query_id"))

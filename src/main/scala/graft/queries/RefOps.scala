@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Slice, Tables}
+import graft.io.ParquetFooters
 import graft.sources.{Cache, Sources}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -295,7 +296,7 @@ object RefOps {
     // bucket — any lost/truncated/renamed entry breaks the md5 extrema
     // or the counts vs the oracle computed directly on the table.
     "op_write_tar" -> { (spark, dir) =>
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
+      val docs = ParquetFooters.read(spark, s"$dir/documents.parquet")
       val outDir = tmpDir("tarw")
       val payload = docs.select(
         concat(col("doc_id").cast("string"), lit(".txt")).as("name"),
@@ -319,7 +320,7 @@ object RefOps {
     // per bucket — escaping bugs (quotes, control chars) or dropped
     // rows break the md5 extrema vs the oracle on the source table.
     "op_write_jsonl" -> { (spark, dir) =>
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
+      val docs = ParquetFooters.read(spark, s"$dir/documents.parquet")
       val out = tmpDir("jsonl")
       docs.select("doc_id", "text", "lang")
         .write.mode("overwrite").json(out)

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.Slice
+import graft.io.ParquetFooters
 import org.apache.spark.sql.{Encoders, Row, SparkSession}
 import java.nio.file.{Files, Paths}
 
@@ -28,12 +29,12 @@ object Cache {
       s.df.write.mode("overwrite").parquet(dir)
       Files.createFile(successMarker(dir))
     }
-    Slice(s.spark.read.parquet(dir), s.prefix)
+    Slice(ParquetFooters.read(s.spark, dir), s.prefix)
   }
 
   /** Read-only view of an existing cache (≅ ReadCache, cache.go:86-95). */
   def readCache(spark: SparkSession, dir: String, prefix: Int = 1): Slice =
-    Slice(spark.read.parquet(dir), prefix)
+    Slice(ParquetFooters.read(spark, dir), prefix)
 
   /**
    * Invalidate a cache directory (≅ Session.Discard,
@@ -75,7 +76,7 @@ object Cache {
     val total = parts.map(f => Files.size(Paths.get(f))).sum
     val n = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
     val tmp = dir.stripSuffix("/") + "__compact_tmp"
-    spark.read.parquet(dir).coalesce(n)
+    ParquetFooters.read(spark, dir).coalesce(n)
       .write.mode("overwrite").parquet(tmp)
     val hadMarker = Files.exists(successMarker(dir))
     discard(dir)
@@ -96,7 +97,7 @@ object Cache {
     s.df.write.mode("overwrite").partitionBy(partCols: _*).parquet(dir)
 
   def readPartitioned(spark: SparkSession, dir: String, prefix: Int = 1): Slice =
-    Slice(spark.read.parquet(dir), prefix)
+    Slice(ParquetFooters.read(spark, dir), prefix)
 
   /**
    * Per-shard cache with partial reuse (≅ CachePartial, cache.go:51-66).

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.Slice
+import graft.io.ParquetFooters
 import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -45,7 +46,7 @@ object Sources {
   /** Parquet source (the corpus format; supersedes the reference's gob
     * cache files). Filters/projections push down to row groups. */
   def readParquet(spark: SparkSession, path: String): Slice =
-    Slice(spark.read.parquet(path))
+    Slice(ParquetFooters.read(spark, path))
 
   def readCsv(spark: SparkSession, path: String, header: Boolean = true): Slice =
     Slice(spark.read.option("header", header.toString).csv(path))

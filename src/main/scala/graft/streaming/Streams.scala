@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.io.ParquetFooters
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -17,7 +18,7 @@ object Streams {
     * the streaming engine — the local test harness; in production the
     * source is kafka/files with identical downstream code). */
   def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
+    val schema = ParquetFooters.read(spark, s"$sfDir/events.parquet").schema
     // glob form: FileStreamSource requires a directory-rooted pattern,
     // not a bare file path (basePath must be a directory).
     val raw = spark.readStream.schema(schema)
@@ -201,7 +202,7 @@ object Streams {
         val slim = batch.select(col(id), col(text))
         val existing =
           if (java.nio.file.Files.exists(java.nio.file.Paths.get(corpusDir)))
-            spark.read.parquet(corpusDir)
+            ParquetFooters.read(spark, corpusDir)
           else spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], slim.schema)
         val p = graft.operators.Dedup.minhashIncremental(

@@ -22,4 +22,8 @@ object shims {
                            builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       name, builder, "scala_udf")
+
+  /** The session's SQL conf, as Spark's own file-format code reads it. */
+  def sqlConf(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.internal.SQLConf =
+    spark.sessionState.conf
 }

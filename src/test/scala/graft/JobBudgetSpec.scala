@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.{TextFunctions => TF}
-import graft.operators.{IvfIndex, Retrieval, TermIndex}
+import graft.operators.{DigestIndex, IvfIndex, MinhashIndex, Retrieval, TermIndex}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -111,4 +111,74 @@ class JobBudgetSpec extends AnyFunSuite {
   private val TermScanJobs = 24
   private val TermPriceJobs = 10
   private val IvfScanJobs = 7
+
+  test("a warm CDC call plus gc, per index family, and Tables.load: " +
+    "pinned job budgets") {
+    val dir = java.nio.file.Files.createTempDirectory("budget_cdc").toString
+    val tCfg = TermIndex.Config(buckets = 8)
+    val iCfg = IvfIndex.Config(dim = 64, nList = 8, iters = 2)
+    val docs = Tables.load(spark, sf, "documents").select("doc_id", "text")
+    val emb = Tables.load(spark, sf, "embeddings")
+      .select(col("vec_id").as("doc_id"), col("embedding"))
+    val base = col("doc_id") < 450
+    DigestIndex.build(spark, docs.filter(base), "doc_id", "text", s"$dir/digest")
+      .unpersist()
+    MinhashIndex.build(spark, docs.filter(base), "doc_id", "text", s"$dir/minhash")
+    TermIndex.build(spark, docs.filter(base), "doc_id", "text", s"$dir/term", tCfg)
+    IvfIndex.build(spark, emb.filter(base), "doc_id", "embedding", s"$dir/ivf", iCfg)
+    // the shape of the cdc benchmark's ingest op: upserts (new ids and
+    // revisions) and deletes through each family, then its gc with the
+    // streaming wrappers' retention
+    def cdc(lo: Long, revise: Int, del: Int): Map[String, Int] = {
+      val ups = (col("doc_id") >= lo && col("doc_id") < lo + 25) ||
+        col("doc_id") % revise === 0
+      val text = docs.filter(ups)
+        .select(col("doc_id"), concat(col("text"), lit(" revised")).as("text"))
+      val vecs = emb.filter(ups)
+      val dels = docs.filter(col("doc_id") % del === 1).select("doc_id")
+      val dead = dels.unionByName(text.select("doc_id"))
+      var pairs = Seq.empty[DataFrame]
+      val counts = Map(
+        "digest" -> jobsOf {
+          pairs :+= DigestIndex.applyCdc(spark, s"$dir/digest", text, dels,
+            "doc_id", "text")
+          DigestIndex.gc(spark, s"$dir/digest", 2)
+        },
+        "minhash" -> jobsOf {
+          MinhashIndex.deleteFromIndex(spark, s"$dir/minhash", dead, "doc_id")
+          pairs :+= MinhashIndex.ingest(spark, s"$dir/minhash", text, "doc_id", "text")
+          MinhashIndex.gc(spark, s"$dir/minhash", 3)
+        },
+        "term" -> jobsOf {
+          TermIndex.applyCdc(spark, s"$dir/term", text, dels, "doc_id", "text", tCfg)
+          TermIndex.gc(spark, s"$dir/term", 2)
+        },
+        "ivf" -> jobsOf {
+          IvfIndex.applyCdc(spark, s"$dir/ivf", vecs, dels, "doc_id", "embedding", iCfg)
+          IvfIndex.gc(spark, s"$dir/ivf", 2)
+        })
+      pairs.foreach(_.unpersist())
+      counts
+    }
+    // the counts are of Spark's default planning: in a shared test JVM an
+    // earlier suite may have turned auto-broadcast off on this session
+    val bcast = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(bcast)
+    spark.conf.unset(bcast)
+    val warm = try {
+      cdc(450, 19, 17) // warm
+      cdc(475, 23, 13)
+    } finally saved.foreach(spark.conf.set(bcast, _))
+    val load = jobsOf(Tables.names.foreach(Tables.load(spark, sf, _)))
+    info(s"jobs per warm CDC call + gc: $warm; Tables.load of every table: $load")
+    CdcJobs.foreach { case (family, bound) =>
+      assert(warm(family) <= bound, s"$family: ${warm(family)} jobs, bound $bound")
+    }
+    assert(load == 0, s"Tables.load: $load jobs")
+  }
+
+  // measured when footer reads replaced schema inference and the counts
+  // of fresh tables (the commit before read 32, 64, 21 and 13, and 10
+  // for Tables.load)
+  private val CdcJobs = Map("digest" -> 28, "minhash" -> 47, "term" -> 21, "ivf" -> 10)
 }
