@@ -5,9 +5,7 @@ import java.io.FileNotFoundException
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.graft.shims
@@ -61,11 +59,8 @@ object ParquetFooters {
       .getOrElse(new ParquetToSparkSchemaConverter(shims.sqlConf(spark)).convert(fm.getSchema))
   }
 
-  private def meta(spark: SparkSession, file: Path): ParquetMetadata = {
-    val r = ParquetFileReader.open(
-      HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
-    try r.getFooter finally r.close()
-  }
+  private def meta(spark: SparkSession, file: Path): ParquetMetadata =
+    ParquetOpen.footer(spark.sparkContext.hadoopConfiguration, file)
 
   /** The data files of `root` in path order: `root` itself when it is a
     * file. Fails when `root` is missing. */

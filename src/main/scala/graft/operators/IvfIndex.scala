@@ -1217,19 +1217,19 @@ object IvfIndex {
     * its vector floats, tombstone-masked rows included), that
     * [[topKAt]] serves from driver-side segment snapshots. Measured
     * with graft.ProbeSnapshotBound (130,000 64-float vectors, 8.3M
-    * floats, 32 lists, 4 cores): the snapshots took 2.6–4.5 s to load
-    * and retained 36 MB of heap ([[SegmentCache]] counted 40 MB),
-    * under a third of its byte bound. */
+    * floats, 32 lists, 4 cores): the snapshots took 1.2–1.5 s to load
+    * and retained 37–46 MB of heap ([[SegmentCache]] counted 40 MB),
+    * about a third of its byte bound. */
   private val SnapshotMaxFloats = 1L << 23
 
   /** Most vector floats a query batch may score (every row of each
     * query's probed lists) and still be served from the snapshots;
     * larger batches run the scan. On the index above, in three runs,
-    * the driver won at 10 queries (10M floats: 0.39–0.94 s against
-    * 0.86–1.53 s) and at 1000 (1.0G floats: 7.9–9.9 s against
-    * 9.4–10.4 s), but lost one of three at 100 (101M floats), so the
-    * bound sits below the 100-query walk. */
-  private val SnapshotMaxWalk = 1L << 26
+    * the driver won every batch measured: 10 queries (10M floats),
+    * 100 (101M) and 1000 (1.0G floats: 1.06–1.25 s against 6.95–7.22 s).
+    * The bound sits just above the 1000-query walk, the largest
+    * measured. */
+  private val SnapshotMaxWalk = 1L << 30
 
   /** One segment's rows of one list: ids, vectors, and each vector's
     * norm as normF computes it. */

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -669,12 +671,8 @@ object MergeTable {
         .groupBy("__bucket").count().collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap
     else perBucket.map { case (b, files) =>
-      b -> files.map { st =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromStatus(st, conf))
-        try r.getRecordCount finally r.close()
-      }.sum
+      b -> files.iterator.map(st => graft.io.ParquetOpen.footer(conf, st)
+        .getBlocks.iterator.asScala.map(_.getRowCount).sum).sum
     }.toMap
   }
 

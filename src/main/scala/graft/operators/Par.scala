@@ -5,6 +5,8 @@ import java.util.concurrent.{Executors, ThreadFactory, TimeoutException}
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 
+import org.apache.spark.graft.CallerContext
+
 /** Shared daemon pool for the refresh families' concurrent driver-job
   * submission (guide §2.6 — actions are only sequential because the
   * driver calls them sequentially). One lazy pool for the whole JVM:
@@ -35,11 +37,16 @@ private[graft] object Par {
     * Spark job), then rethrow the FIRST failure if any. A leg still
     * running at `timeout` fails the call with a [[TimeoutException]]
     * naming every unfinished leg; the hung leg's thread is a daemon
-    * and is left to finish or die with the JVM. */
+    * and is left to finish or die with the JVM.
+    *
+    * Each leg runs under the caller's Spark local properties (job group,
+    * description, scheduler pool) and active session: a pooled thread
+    * would otherwise keep those of the thread that created it. */
   def all[T](legs: Seq[(String, () => T)],
              timeout: FiniteDuration = DefaultTimeout): Seq[T] = {
+    val caller = CallerContext.capture()
     val fs = legs.map { case (_, b) =>
-      Future(b())(ec)
+      Future(caller.run(b()))(ec)
         .map(Right(_): Either[Throwable, T])(ec)
         .recover { case e => Left(e) }(ec)
     }

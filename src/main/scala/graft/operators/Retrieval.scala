@@ -136,46 +136,58 @@ object Retrieval {
       }
     lastGate.set(gated)
     val termTop = if (gated.isEmpty) termLocal.map(_.topK(kInner)) else None
-    val bm = gated match {
-      case Some(_) =>
-        // gated: the sparse leg is skipped for this batch — candidates
-        // come from the dense leg alone, cost ∝ probed lists
-        probesText.limit(0).select(lit(0L).as("probe_id"),
-          lit(0L).as("doc_id"), lit(0L).as("__rt"))
-      case None =>
-        termTop.map(rows => spark.createDataFrame(
-            java.util.Arrays.asList(rows: _*), termLocal.get.schema))
-          .getOrElse(TermIndex.topKAtScan(spark, termIdxDir, termV,
-            probesText, id, text, kInner,
-            termCfg.copy(maxCandidateFraction = TermIndex.ExactUnbounded),
-            terms))
-          .select(col("probe_id"), col("doc_id"), col("rank").as("__rt"))
-    }
     val ivfV = IvfIndex.latestVersion(spark, ivfIdxDir)
     IvfIndex.requireLiveVersion(spark, ivfIdxDir, ivfV)
     val ivfTop = IvfIndex.localTopK(spark, ivfIdxDir, ivfV, probesEmb, id,
       vec, kInner, nProbe)
-    val dn = ivfTop.map { case (schema, rows) =>
-        spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-      }
-      .getOrElse(IvfIndex.topKAtScan(spark, ivfIdxDir, ivfV, probesEmb, id,
-        vec, kInner, nProbe))
-      .select(col("query_id").as("probe_id"),
-        col("neighbor_id").as("doc_id"), col("rnk").cast("long").as("__rd"))
     // both legs local (snapshot-served, or the sparse leg gated): fuse
     // in the driver, as fuseRrf would — fuseRrf over the two local legs
-    // runs 5 Spark jobs, 0.1-0.25 s of a warm cdc_serve probe
-    val bmRows =
-      if (gated.isDefined) Some(Seq.empty)
-      else termTop.map(_.map(r => (r.get(0), r.getLong(2), r.getLong(1))))
-    val dnRows = ivfTop.map(_._2.map(r => (r.get(0), r.get(2),
-      r.getInt(1).toLong)))
-    (for (b <- bmRows; d <- dnRows;
-          rows <- fuseLocal(b, d, bm.schema, dn.schema, k, rrfK, scale))
+    // runs 5 Spark jobs, 0.1-0.25 s of a warm cdc_serve probe. The legs'
+    // key types come from the local schemas: no frame is built.
+    val bmLocal = gated match {
+      case Some(_) => Some((GatedSchema, Seq.empty))
+      case None => termTop.map(rows => (termLocal.get.schema,
+        rows.map(r => (r.get(0), r.getLong(2), r.getLong(1)))))
+    }
+    val dnLocal = ivfTop.map { case (schema, rows) =>
+      (schema, rows.map(r => (r.get(0), r.get(2), r.getInt(1).toLong)))
+    }
+    (for ((bs, b) <- bmLocal; (ds, d) <- dnLocal;
+          rows <- fuseLocal(b, d, bs("probe_id").dataType, bs("doc_id").dataType,
+            ds("query_id").dataType, ds("neighbor_id").dataType, k, rrfK, scale))
       yield spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-        fusedSchema(bm.schema("probe_id").dataType)))
-      .getOrElse(fuseRrf(bm, dn, k, rrfK, scale))
+        fusedSchema(bs("probe_id").dataType)))
+      .getOrElse {
+        val bm = gated match {
+          case Some(_) =>
+            // gated: the sparse leg is skipped for this batch —
+            // candidates come from the dense leg alone, cost ∝ probed lists
+            probesText.limit(0).select(lit(0L).as("probe_id"),
+              lit(0L).as("doc_id"), lit(0L).as("__rt"))
+          case None =>
+            termTop.map(rows => spark.createDataFrame(
+                java.util.Arrays.asList(rows: _*), termLocal.get.schema))
+              .getOrElse(TermIndex.topKAtScan(spark, termIdxDir, termV,
+                probesText, id, text, kInner,
+                termCfg.copy(maxCandidateFraction = TermIndex.ExactUnbounded),
+                terms))
+              .select(col("probe_id"), col("doc_id"), col("rank").as("__rt"))
+        }
+        val dn = ivfTop.map { case (schema, rows) =>
+            spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+          }
+          .getOrElse(IvfIndex.topKAtScan(spark, ivfIdxDir, ivfV, probesEmb, id,
+            vec, kInner, nProbe))
+          .select(col("query_id").as("probe_id"),
+            col("neighbor_id").as("doc_id"), col("rnk").cast("long").as("__rd"))
+        fuseRrf(bm, dn, k, rrfK, scale)
+      }
   }
+
+  /** The gated sparse leg's (probe_id, doc_id, rank) key columns: the
+    * empty frame [[hybridRrfIndexed]] fuses is all longs. */
+  private val GatedSchema = StructType(Seq("probe_id", "doc_id", "rank")
+    .map(StructField(_, LongType, nullable = false)))
 
   /** [[fuseRrf]]'s output schema over legs keyed by `probeType`. */
   private def fusedSchema(probeType: DataType): StructType =
@@ -191,11 +203,11 @@ object Retrieval {
     * equality: the legs' key types differ, a probe id is null, or a
     * negative rrfK could divide by zero. */
   private def fuseLocal(bm: Seq[(Any, Long, Long)], dn: Seq[(Any, Any, Long)],
-                        bmSchema: StructType, dnSchema: StructType, k: Int,
+                        bmProbe: DataType, bmDoc: DataType,
+                        dnProbe: DataType, dnDoc: DataType, k: Int,
                         rrfK: Int, scale: Long): Option[Seq[Row]] = {
-    if (bmSchema("probe_id").dataType != dnSchema("probe_id").dataType ||
-      bmSchema("doc_id").dataType != LongType ||
-      dnSchema("doc_id").dataType != LongType || rrfK < 0 ||
+    if (bmProbe != dnProbe || bmDoc != LongType || dnDoc != LongType ||
+      rrfK < 0 ||
       bm.exists(_._1 == null) || dn.exists(_._1 == null)) return None
     def part(rank: Long): Long = scale / (rrfK.toLong + rank)
     val bmBy = bm.groupMap(r => (r._1, r._2))(r => part(r._3))

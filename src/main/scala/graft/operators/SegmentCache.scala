@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.io.ParquetFooters
+import graft.io.{ParquetFooters, ParquetOpen}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
@@ -115,8 +115,6 @@ private[graft] object SegmentCache {
   def foreachRow(spark: SparkSession, key: Key, cols: Seq[StructField])
                 (f: Array[Any] => Unit): Unit = {
     import org.apache.parquet.example.data.Group
-    import org.apache.parquet.hadoop.ParquetReader
-    import org.apache.parquet.hadoop.example.GroupReadSupport
     val conf = spark.sparkContext.hadoopConfiguration
     def value(g: Group, c: StructField): Any =
       if (g.getFieldRepetitionCount(c.name) == 0) null
@@ -144,8 +142,7 @@ private[graft] object SegmentCache {
         case Array(k, v) => Some(k -> v)
         case _ => None
       }).toMap
-      val r = ParquetReader.builder(new GroupReadSupport(),
-        new Path(s"${key.path}/$name")).withConf(conf).build()
+      val r = ParquetOpen.groups(conf, new Path(s"${key.path}/$name"))
       try {
         var g = r.read()
         while (g != null) {

@@ -1325,16 +1325,15 @@ object TermIndex {
     * rows), that [[topKAt]] scores from driver-side segment snapshots.
     * Measured with graft.ProbeSnapshotBound (sf0.1 documents × 7,
     * 1.86–1.89M tokens, 4 cores): the snapshots retained 19 MB of heap
-    * for unigram terms and 42 MB for bigram terms, and took 2.0–2.5 s
-    * and 2.7–3.6 s to load; 42 MB is a third of [[SegmentCache]]'s
-    * byte bound. */
+    * for unigram terms and 42 MB for bigram terms, and took 1.3 s and
+    * 2.1 s to load; 42 MB is a third of [[SegmentCache]]'s byte bound. */
   private val SnapshotMaxTokens = 1L << 21
 
   /** Most posting rows a batch may walk ([[LocalProbe.walk]]) and
     * still be scored in the driver; larger batches run the scan. On the
     * index above the driver beat the scan on every batch measured, up
-    * to 27.5M walked bigram postings (7.3–8.1 s against 25–32 s) and 163M
-    * unigram ones (12.8 s against 102 s); the bound sits just above the
+    * to 27.5M walked bigram postings (6.4 s against 18.8 s) and 163M
+    * unigram ones (9.0 s against 69.7 s); the bound sits just above the
     * largest bigram walk measured, the slower shape per posting. */
   private val SnapshotMaxWalk = 1L << 25
 

@@ -3,11 +3,12 @@ package graft
 import graft.sources.Bucketing
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Co-located joins over bucketed tables: correctness + the plan
   * contract that makes bucketing worth it (no Exchange at all). */
-class BucketingSpec extends AnyFunSuite {
+class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
   // In a shared test JVM getOrCreate may return another suite's session
   // (static configs like warehouse.dir then don't apply) — use only
   // RUNTIME SQL configs and clean table locations explicitly.
@@ -21,10 +22,20 @@ class BucketingSpec extends AnyFunSuite {
       .getOrCreate()
     // disable auto-broadcast so the test proves bucket co-location,
     // not broadcast, removes the shuffle (runtime config — applies
-    // even on a reused session)
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // even on a reused session); afterAll restores it for later suites
+    savedBroadcast = Some(s.conf.getOption(Broadcast))
+    s.conf.set(Broadcast, "-1")
     s
   }
+
+  private val Broadcast = "spark.sql.autoBroadcastJoinThreshold"
+  private var savedBroadcast: Option[Option[String]] = None
+
+  override def afterAll(): Unit =
+    try savedBroadcast.foreach {
+      case Some(v) => spark.conf.set(Broadcast, v)
+      case None => spark.conf.unset(Broadcast)
+    } finally super.afterAll()
 
   val sf = "/root/testdata/sf0.001"
 

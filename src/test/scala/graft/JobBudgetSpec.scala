@@ -1,9 +1,9 @@
 package graft
 
 import graft.functions.{TextFunctions => TF}
-import graft.operators.{DigestIndex, IvfIndex, MinhashIndex, Retrieval, TermIndex}
+import graft.operators.{DigestIndex, Ivm, IvfIndex, MinhashIndex, Retrieval, TermIndex}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -160,15 +160,10 @@ class JobBudgetSpec extends AnyFunSuite {
       pairs.foreach(_.unpersist())
       counts
     }
-    // the counts are of Spark's default planning: in a shared test JVM an
-    // earlier suite may have turned auto-broadcast off on this session
-    val bcast = "spark.sql.autoBroadcastJoinThreshold"
-    val saved = spark.conf.getOption(bcast)
-    spark.conf.unset(bcast)
-    val warm = try {
+    val warm = withDefaultBroadcast {
       cdc(450, 19, 17) // warm
       cdc(475, 23, 13)
-    } finally saved.foreach(spark.conf.set(bcast, _))
+    }
     val load = jobsOf(Tables.names.foreach(Tables.load(spark, sf, _)))
     info(s"jobs per warm CDC call + gc: $warm; Tables.load of every table: $load")
     CdcJobs.foreach { case (family, bound) =>
@@ -181,4 +176,51 @@ class JobBudgetSpec extends AnyFunSuite {
   // of fresh tables (the commit before read 32, 64, 21 and 13, and 10
   // for Tables.load)
   private val CdcJobs = Map("digest" -> 28, "minhash" -> 47, "term" -> 21, "ivf" -> 10)
+
+  /** `f` under Spark's default auto-broadcast threshold: the counts are
+    * of Spark's default planning, and in a shared test JVM an earlier
+    * suite may have changed the setting on this session. */
+  private def withDefaultBroadcast[T](f: => T): T = {
+    val bcast = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(bcast)
+    spark.conf.unset(bcast)
+    try f finally saved.foreach(spark.conf.set(bcast, _))
+  }
+
+  test("a warm view refresh, Ivm.applyDelta plus gc, on a small " +
+    "insert/delete batch: pinned job budget") {
+    val dir = java.nio.file.Files.createTempDirectory("budget_view")
+      .toString + "/view"
+    // the stream-maintained view of the cdc benchmark
+    val rows = Tables.load(spark, sf, "documents").select(col("doc_id"),
+      col("lang"), col("source"), length(col("text")).cast("long").as("n_chars"))
+    val spec = Ivm.Spec(groupCols = Seq("lang"), aggs = Seq(
+      Ivm.Count("cnt"), Ivm.Sum("n_chars", "sum_chars"), Ivm.Min("doc_id", "min_id"),
+      Ivm.Max("n_chars", "max_chars"), Ivm.Avg("n_chars", "avg_chars"),
+      Ivm.CountDistinct("source", "n_sources")))
+    Ivm.create(spark, dir, rows.schema, spec, nBuckets = 8)
+    Ivm.applyDelta(spark, dir, rows.filter(col("doc_id") < 450), rows.limit(0))
+    // 25 new rows in, and a share of the base rows out (each deleted once)
+    def refresh(lo: Long, del: Column): Int = jobsOf {
+      Ivm.applyDelta(spark, dir,
+        rows.filter(col("doc_id") >= lo && col("doc_id") < lo + 25),
+        rows.filter(col("doc_id") < 450 && del))
+      Ivm.gc(spark, dir, 2)
+    }
+    val counts = withDefaultBroadcast(Seq(
+      refresh(450, col("doc_id") % 17 === 1), // warm
+      refresh(475, col("doc_id") % 13 === 1 && col("doc_id") % 17 =!= 1)))
+    info(s"jobs per view refresh + gc: ${counts.mkString(", ")}")
+    assert(counts(1) <= ViewRefreshJobs, s"view refresh: ${counts(1)} jobs")
+    val want = rows.filter(col("doc_id") < 500 &&
+        !(col("doc_id") < 450 && (col("doc_id") % 17 === 1 || col("doc_id") % 13 === 1)))
+      .groupBy("lang").agg(count(lit(1)).as("cnt")).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val got = Ivm.readView(spark, dir).select("lang", "cnt").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(got == want)
+  }
+
+  // measured when the view refresh was pinned, the jobs of Par's
+  // concurrent z-set and view commits counted under the caller's group
+  private val ViewRefreshJobs = 27
 }
