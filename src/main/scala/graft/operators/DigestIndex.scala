@@ -118,25 +118,13 @@ object DigestIndex {
     * [[MinhashIndex]]'s MaxPushdownCandidates. */
   private val MaxPushdownCandidates = 10 * 1000
 
-  import VersionedLayout.{atomicWrite, fs, readSmall, versionDir, withClaim}
+  import VersionedLayout.{fs, versionDir, withClaim}
 
   def exists(spark: SparkSession, dir: String): Boolean =
     VersionedLayout.exists(spark, dir)
 
   def latestVersion(spark: SparkSession, dir: String): Int =
     VersionedLayout.latestVersion(spark, dir, FormatVersion, "DigestIndex")
-
-  /** Small named marker alongside the index (streaming wrappers pin
-    * their batch↔version pairing here — sibling contract). */
-  def readMarker(spark: SparkSession, dir: String, name: String): Option[String] = {
-    val f = fs(spark, dir)
-    val p = new Path(dir, name)
-    if (!f.exists(p)) None else Some(readSmall(f, p))
-  }
-
-  def writeMarker(spark: SparkSession, dir: String, name: String,
-                  content: String): Unit =
-    atomicWrite(fs(spark, dir), new Path(dir, name), content)
 
   private def segPath(dir: String, name: String): String =
     s"${dir.stripSuffix("/")}/segments/$name"

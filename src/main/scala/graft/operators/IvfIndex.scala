@@ -137,28 +137,13 @@ object IvfIndex {
 
   private val FormatVersion = 1
 
-  import VersionedLayout.{atomicWrite, fs, readSmall, versionDir, withClaim}
+  import VersionedLayout.{fs, versionDir, withClaim}
 
   def exists(spark: SparkSession, dir: String): Boolean =
     VersionedLayout.exists(spark, dir)
 
   def latestVersion(spark: SparkSession, dir: String): Int =
     VersionedLayout.latestVersion(spark, dir, FormatVersion, "IvfIndex")
-
-  /** Read a small named marker file stored alongside the index (e.g. a
-    * streaming wrapper's batch-id↔version pairing), if present — same
-    * contract as [[MinhashIndex.readMarker]]. */
-  def readMarker(spark: SparkSession, dir: String, name: String): Option[String] = {
-    val f = fs(spark, dir)
-    val p = new Path(dir, name)
-    if (!f.exists(p)) None else Some(readSmall(f, p))
-  }
-
-  /** Atomically write a small named marker file alongside the index
-    * (tmp + rename — a crash never leaves a partial marker visible). */
-  def writeMarker(spark: SparkSession, dir: String, name: String,
-                  content: String): Unit =
-    atomicWrite(fs(spark, dir), new Path(dir, name), content)
 
   private def segPath(dir: String, name: String): String =
     s"${dir.stripSuffix("/")}/segments/$name"

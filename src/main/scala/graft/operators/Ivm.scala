@@ -507,19 +507,6 @@ object Ivm {
     readSync(spark, dir) != ((latestVersion(spark, dir),
       MergeTable.latestVersion(spark, viewDir(dir))))
 
-  /** Small named marker alongside the view (streaming wrappers pin
-    * their batch↔version pairing here — the index-family contract). */
-  def readMarker(spark: SparkSession, dir: String,
-                 name: String): Option[String] = {
-    val f = fs(spark, dir)
-    val p = new Path(dir, name)
-    if (!f.exists(p)) None else Some(readSmall(f, p))
-  }
-
-  def writeMarker(spark: SparkSession, dir: String, name: String,
-                  content: String): Unit =
-    atomicWrite(fs(spark, dir), new Path(dir, name), content)
-
   def exists(spark: SparkSession, dir: String): Boolean =
     fs(spark, dir).exists(new Path(dir, "SPEC")) &&
       MergeTable.exists(spark, zsetDir(dir))

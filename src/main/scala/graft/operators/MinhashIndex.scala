@@ -115,20 +115,6 @@ object MinhashIndex {
   def exists(spark: SparkSession, dir: String): Boolean =
     VersionedLayout.exists(spark, dir)
 
-  /** Read a small named marker file stored alongside the index (e.g. a
-    * streaming wrapper's batch-id↔version pairing), if present. */
-  def readMarker(spark: SparkSession, dir: String, name: String): Option[String] = {
-    val f = fs(spark, dir)
-    val p = new Path(dir, name)
-    if (!f.exists(p)) None else Some(VersionedLayout.readSmall(f, p))
-  }
-
-  /** Atomically write a small named marker file alongside the index
-    * (tmp + rename — a crash never leaves a partial marker visible). */
-  def writeMarker(spark: SparkSession, dir: String, name: String,
-                  content: String): Unit =
-    atomicWrite(fs(spark, dir), new Path(dir, name), content)
-
   /** Catalog name for a version's bands table: derived from the index
     * path so concurrent indexes in one session never collide. */
   private def bandsTableName(dir: String, v: Int): String =

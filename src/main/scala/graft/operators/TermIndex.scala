@@ -408,22 +408,6 @@ object TermIndex {
     1
   }
 
-  /** Read a small named marker file stored alongside the index (e.g.
-    * the streaming wrapper's batch-id↔version pairing), if present —
-    * same contract as [[IvfIndex.readMarker]]. */
-  def readMarker(spark: SparkSession, dir: String,
-                 name: String): Option[String] = {
-    val f = fs(spark, dir)
-    val p = new Path(dir, name)
-    if (!f.exists(p)) None else Some(readSmall(f, p))
-  }
-
-  /** Atomically write a small named marker file alongside the index
-    * (tmp + rename — a crash never leaves a partial marker visible). */
-  def writeMarker(spark: SparkSession, dir: String, name: String,
-                  content: String): Unit =
-    atomicWrite(fs(spark, dir), new Path(dir, name), content)
-
   /** Union of tombstone id sets as (t_id, t_seq) — None when empty.
     * `d` datasets carry one doc_id column (sequence = the name);
     * `c` datasets are COALESCED — (doc_id, seq) rows, the max sequence

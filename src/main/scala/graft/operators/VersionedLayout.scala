@@ -50,6 +50,20 @@ private[graft] object VersionedLayout {
     require(f.rename(tmp, dst), s"failed to commit $dst")
   }
 
+  /** A small named marker alongside a versioned dir, if present: a
+    * stream's batch↔version pairing (`graft.streaming.ReplayPin`), or
+    * [[TermIndex]]'s term configuration. */
+  def readMarker(spark: SparkSession, dir: String, name: String): Option[String] = {
+    val f = fs(spark, dir)
+    val p = new Path(dir, name)
+    if (!f.exists(p)) None else Some(readSmall(f, p))
+  }
+
+  /** Write a small named marker alongside a versioned dir, atomically. */
+  def writeMarker(spark: SparkSession, dir: String, name: String,
+                  content: String): Unit =
+    atomicWrite(fs(spark, dir), new Path(dir, name), content)
+
   private def latestDir(dir: String): Path =
     new Path(s"${dir.stripSuffix("/")}/latest")
 

@@ -224,27 +224,11 @@ object Streams {
    * crash-consistency contract). Emits the identical per-batch pair
    * sets (StreamingSpec).
    *
-   * At-least-once redelivery (foreachBatch's contract): at first
-   * contact the stream pins its batch-id↔version pairing INTO the
-   * index as an atomic `STREAM` marker `(firstBatchId, baseVersion)`,
-   * so batch b is expected to commit version `base + (b - firstB) + 1`
-   * regardless of whether this stream bootstrapped the index or
-   * attached to a pre-existing one. A REPLAYED batch — one whose
-   * ingest already committed before a crash — is exactly the case
-   * `latest == expected`, handled by a read-only re-probe of the
-   * version the original ingest ran against
-   * ([[graft.operators.MinhashIndex.replayDupPairsAt]], which also
-   * releases the probe's caches): identical pairs re-emitted, the
-   * index never double-ingested. ANY other mismatch between latest and
-   * expected fails fast instead of silently misclassifying — the
-   * checkpoint (mandatory, it is what keeps batch ids monotone across
-   * restarts) and the index are ONE unit of state: delete both or
-   * neither.
-   *
-   * Retention: each commit calls [[graft.operators.MinhashIndex.gc]]
-   * keeping `retainVersions` (>= 2 — replay of the in-flight batch
-   * needs the previous version), so disk holds a bounded number of
-   * corpus snapshots instead of one per batch.
+   * Replay (README "Streaming replay contract"): one commit per batch.
+   * A redelivered batch re-probes the version its ingest ran against,
+   * read-only ([[graft.operators.MinhashIndex.replayDupPairsAt]], which
+   * also releases the probe's caches), so `retainVersions` keeps that
+   * prior version.
    */
   def nearDupStreamIndexed(docs: DataFrame, id: String, text: String,
                            indexDir: String,
@@ -253,17 +237,10 @@ object Streams {
                              graft.operators.MinhashIndex.Config(),
                            retainVersions: Int = 2)
                           (onPairs: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(retainVersions >= 2,
-      s"retainVersions must be >= 2 (replay needs the prior version): $retainVersions")
-    docs.writeStream.outputMode("append")
-      .option("checkpointLocation", checkpointLocation)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        nearDupIndexedBatch(batch, batchId, id, text, indexDir, cfg,
-          retainVersions)(onPairs)
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    ReplayPin.start(docs, checkpointLocation, retainVersions) { (batch, batchId) =>
+      nearDupIndexedBatch(batch, batchId, id, text, indexDir, cfg, retainVersions)(onPairs)
+    }
 
   /** One micro-batch of [[nearDupStreamIndexed]] — factored out so
     * fault-injection tests can drive the exact production code path
@@ -281,45 +258,13 @@ object Streams {
     // pairs (every pair touches the batch vacuously)
     if (!MinhashIndex.exists(spark, indexDir))
       MinhashIndex.build(spark, slim.limit(0), id, text, indexDir, cfg)
-    val (firstB, base) =
-      MinhashIndex.readMarker(spark, indexDir, "STREAM") match {
-        case Some(s) =>
-          val parts = s.split(" ")
-          (parts(0).toLong, parts(1).toInt)
-        case None =>
-          // first contact (bootstrap or attach-to-existing): pin the
-          // pairing before any ingest. Idempotent under redelivery —
-          // a crash after the marker but before the ingest recomputes
-          // the same (batchId, latest) pair.
-          val bv = MinhashIndex.latestVersion(spark, indexDir)
-          MinhashIndex.writeMarker(spark, indexDir, "STREAM", s"$batchId $bv")
-          (batchId, bv)
-      }
-    require(batchId >= firstB,
-      s"batch id $batchId precedes this index's first stream batch " +
-        s"$firstB — the stream checkpoint was reset against an existing " +
-        "index; checkpoint and index are one unit of state (delete both " +
-        "or neither)")
-    val expected = base + (batchId - firstB).toInt + 1
-    val latest = MinhashIndex.latestVersion(spark, indexDir)
-    if (latest == expected) {
-      // replayed batch: its ingest already committed — re-emit the
-      // identical pairs read-only, never double-ingest
-      val p = MinhashIndex.replayDupPairsAt(
-        spark, indexDir, expected - 1, slim, id, text, cfg)
-      try onPairs(p, batchId)
-      finally p.unpersist()
-    } else if (latest == expected - 1) {
-      val p = MinhashIndex.ingest(spark, indexDir, slim, id, text, cfg)
-      try onPairs(p, batchId)
-      finally p.unpersist() // one cache generation per batch otherwise
+    val b = ReplayPin.pin(spark, indexDir, batchId)(
+      Seq(MinhashIndex.latestVersion(spark, indexDir)))(onPairs)
+    if (b.landed) b.deliver(MinhashIndex.replayDupPairsAt(
+      spark, indexDir, b.committed() - 1, slim, id, text, cfg))
+    else {
+      b.deliver(MinhashIndex.ingest(spark, indexDir, slim, id, text, cfg))
       MinhashIndex.gc(spark, indexDir, retainVersions)
-    } else {
-      throw new IllegalStateException(
-        s"index at $indexDir is at version $latest but batch $batchId " +
-          s"expects $expected (committed) or ${expected - 1} (fresh): " +
-          "stream checkpoint and index state disagree — one was deleted " +
-          "or rolled back without the other")
     }
   }
 
@@ -333,29 +278,17 @@ object Streams {
    * far INCLUDING the batch itself (batch-internal neighbors count;
    * self is excluded by [[graft.operators.IvfIndex.topKAt]]).
    *
-   * Same at-least-once redelivery contract as [[nearDupStreamIndexed]]:
-   * first contact pins the batch-id↔version pairing as an atomic
-   * `STREAM` marker `(firstBatchId, baseVersion)` BEFORE the first
-   * commit, so batch b is expected to commit `base + (b - firstB) + 1`.
-   * A replayed batch (`latest == expected`) re-emits read-only via
-   * `topKAt(expected)` — pair-identical results, never double-appended
-   * (append is version-per-batch even for EMPTY batches, which keeps
-   * the arithmetic aligned through quiet periods). Any other mismatch
-   * fails fast: checkpoint and index are one unit of state.
-   *
-   * Bootstrap differs from minhash in one way forced by IVF itself:
-   * centroids need data, so there is no empty-index build — the first
-   * NON-EMPTY batch builds v1 (marker pinned with base 0 first; a
-   * crash between marker and build re-runs the build, which overwrites
-   * only its own uncommitted segment). Pre-bootstrap empty batches are
-   * emitted-empty no-ops; they complete their checkpoint before the
-   * bootstrap batch starts, so they are never replayed across it.
-   *
-   * Retention: each commit calls [[graft.operators.IvfIndex.gc]]
-   * keeping `retainVersions` (>= 2 — replay of the in-flight batch
-   * needs its own committed version alive), which also reaps segments
-   * stranded by size/drift compactions as their referencing versions
-   * age out.
+   * Replay (README "Streaming replay contract"): one commit per batch,
+   * even for an EMPTY batch, which keeps the pairing aligned through
+   * quiet periods; the emit reads the batch's own version. Centroids
+   * need data, so there is no empty-index bootstrap: the stream pins
+   * base 0 and the first NON-EMPTY batch builds v1 (a crash between
+   * marker and build re-runs the build, which overwrites only its own
+   * uncommitted segment). Empty batches before it emit nothing; they
+   * complete their checkpoint before the bootstrap batch starts, so
+   * they are never replayed across it. Each commit's gc also reaps
+   * segments stranded by size/drift compactions as their referencing
+   * versions age out.
    */
   def annStreamIndexed(vectors: DataFrame, id: String, vec: String,
                        indexDir: String,
@@ -364,17 +297,11 @@ object Streams {
                        k: Int = 10, nProbe: Int = 4,
                        retainVersions: Int = 2)
                       (onTopK: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(retainVersions >= 2,
-      s"retainVersions must be >= 2 (replay needs the batch's own version): $retainVersions")
-    vectors.writeStream.outputMode("append")
-      .option("checkpointLocation", checkpointLocation)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        annIndexedBatch(batch, batchId, id, vec, indexDir, cfg, k, nProbe,
-          retainVersions)(onTopK)
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    ReplayPin.start(vectors, checkpointLocation, retainVersions) { (batch, batchId) =>
+      annIndexedBatch(batch, batchId, id, vec, indexDir, cfg, k, nProbe,
+        retainVersions)(onTopK)
+    }
 
   /** One micro-batch of [[annStreamIndexed]] — factored out so
     * fault-injection tests can drive the exact production code path
@@ -384,78 +311,47 @@ object Streams {
       id: String, vec: String, indexDir: String,
       cfg: graft.operators.IvfIndex.Config, k: Int, nProbe: Int,
       retainVersions: Int)(onTopK: (DataFrame, Long) => Unit): Unit = {
-    import graft.operators.IvfIndex
-    val spark = batch.sparkSession
     val slim = batch.select(col(id), col(vec))
-    if (!IvfIndex.exists(spark, indexDir) &&
-        IvfIndex.readMarker(spark, indexDir, "STREAM").isEmpty &&
-        slim.isEmpty) {
+    ivfBatch(slim, batchId, id, vec, indexDir, cfg, k, nProbe, retainVersions)(
+      graft.operators.IvfIndex.append(batch.sparkSession, indexDir, slim, id, vec, cfg))(onTopK)
+  }
+
+  /** The IvfIndex wrappers' micro-batch: `rows` (id, vec) commit as the
+    * build of v1 on the first non-empty batch and through `commit`
+    * after it, and get their top-k at the batch's own version. */
+  private def ivfBatch(rows: DataFrame, batchId: Long, id: String, vec: String,
+                       indexDir: String, cfg: graft.operators.IvfIndex.Config,
+                       k: Int, nProbe: Int, retainVersions: Int)(commit: => Unit)
+                      (onTopK: (DataFrame, Long) => Unit): Unit = {
+    import graft.operators.IvfIndex
+    val spark = rows.sparkSession
+    if (!IvfIndex.exists(spark, indexDir) && !ReplayPin.pinned(spark, indexDir) &&
+        rows.isEmpty) {
       // quiet pre-bootstrap batch: nothing to train on, nothing to emit
-      onTopK(slim.limit(0)
+      onTopK(rows.limit(0)
         .select(col(id).as("query_id"), lit(1).as("rnk"),
           col(id).as("neighbor_id"), lit(0.0).as("cos")), batchId)
       return
     }
-    val (firstB, base) = IvfIndex.readMarker(spark, indexDir, "STREAM") match {
-      case Some(s) =>
-        val parts = s.split(" ")
-        (parts(0).toLong, parts(1).toInt)
-      case None =>
-        // pin the pairing BEFORE the first commit (bootstrap: base 0;
-        // attach-to-existing: base = current latest). Idempotent under
-        // redelivery — a crash after the marker but before the commit
-        // recomputes the same pair.
-        val bv = if (IvfIndex.exists(spark, indexDir))
-          IvfIndex.latestVersion(spark, indexDir) else 0
-        IvfIndex.writeMarker(spark, indexDir, "STREAM", s"$batchId $bv")
-        (batchId, bv)
+    val b = ReplayPin.pin(spark, indexDir, batchId)(Seq(
+      if (IvfIndex.exists(spark, indexDir)) IvfIndex.latestVersion(spark, indexDir)
+      else 0))(onTopK)
+    if (!b.landed) {
+      if (b.committed() == 1) IvfIndex.build(spark, rows, id, vec, indexDir, cfg)
+      else commit
     }
-    require(batchId >= firstB,
-      s"batch id $batchId precedes this index's first stream batch " +
-        s"$firstB — the stream checkpoint was reset against an existing " +
-        "index; checkpoint and index are one unit of state (delete both " +
-        "or neither)")
-    val expected = base + (batchId - firstB).toInt + 1
-    val latest = if (IvfIndex.exists(spark, indexDir))
-      IvfIndex.latestVersion(spark, indexDir) else 0
-    def emitAt(version: Int): Unit = {
-      // materialize against the pinned version before anything else
-      // can mutate the index (same discipline as replayDupPairsAt)
-      val out = IvfIndex.topKAt(spark, indexDir, version, slim, id, vec,
-        k, nProbe).persist()
-      out.count()
-      try onTopK(out, batchId)
-      finally out.unpersist()
-    }
-    if (latest == expected) {
-      // replayed batch: its append already committed — re-emit the
-      // identical results read-only, never double-append
-      emitAt(expected)
-    } else if (latest == expected - 1) {
-      if (latest == 0) IvfIndex.build(spark, slim, id, vec, indexDir, cfg)
-      else IvfIndex.append(spark, indexDir, slim, id, vec, cfg)
-      emitAt(expected)
-      IvfIndex.gc(spark, indexDir, retainVersions)
-    } else {
-      throw new IllegalStateException(
-        s"index at $indexDir is at version $latest but batch $batchId " +
-          s"expects $expected (committed) or ${expected - 1} (fresh): " +
-          "stream checkpoint and index state disagree — one was deleted " +
-          "or rolled back without the other")
-    }
+    b.emit(IvfIndex.topKAt(spark, indexDir, b.committed(), rows, id, vec, k, nProbe))
+    if (!b.landed) IvfIndex.gc(spark, indexDir, retainVersions)
   }
 
   /**
-   * Replay-safe streaming CDC ingest for the IVF index: each
-   * micro-batch carries (op, id, vec) rows — `opCol` ∈
-   * {"upsert", "delete"} — applied in ONE commit per batch
-   * ([[graft.operators.IvfIndex.applyCdc]]: a single tombstone masks
-   * every strictly-older copy of both sets, the new segment carries
-   * only the upserted rows), with the same pinned batch-id↔version
-   * pairing, fail-fast divergence and per-commit gc as
-   * [[annStreamIndexed]]. `onTopK` receives the batch's UPSERTED
-   * vectors' top-k at the batch's own pinned version — a redelivered
-   * batch re-applies nothing and re-emits identical results. Deletes
+   * Streaming CDC ingest for the IVF index: each micro-batch carries
+   * (op, id, vec) rows — `opCol` ∈ {"upsert", "delete"} — applied in
+   * ONE commit per batch ([[graft.operators.IvfIndex.applyCdc]]: a
+   * single tombstone masks every strictly-older copy of both sets, the
+   * new segment carries only the upserted rows), under
+   * [[annStreamIndexed]]'s replay and bootstrap. `onTopK` receives the
+   * batch's UPSERTED vectors' top-k at the batch's own version. Deletes
    * emit nothing; their effect shows in every later probe. Deletes
    * arriving before the index bootstraps refer to nothing and are
    * dropped with the quiet batch.
@@ -467,17 +363,11 @@ object Streams {
                        k: Int = 10, nProbe: Int = 4,
                        retainVersions: Int = 2)
                       (onTopK: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(retainVersions >= 2,
-      s"retainVersions must be >= 2 (replay needs the batch's own version): $retainVersions")
-    events.writeStream.outputMode("append")
-      .option("checkpointLocation", checkpointLocation)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        cdcIndexedBatch(batch, batchId, opCol, id, vec, indexDir, cfg, k,
-          nProbe, retainVersions)(onTopK)
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    ReplayPin.start(events, checkpointLocation, retainVersions) { (batch, batchId) =>
+      cdcIndexedBatch(batch, batchId, opCol, id, vec, indexDir, cfg, k,
+        nProbe, retainVersions)(onTopK)
+    }
 
   /** One micro-batch of [[cdcStreamIndexed]] — factored out for
     * fault-injection tests, like [[annIndexedBatch]]. */
@@ -486,70 +376,20 @@ object Streams {
       opCol: String, id: String, vec: String, indexDir: String,
       cfg: graft.operators.IvfIndex.Config, k: Int, nProbe: Int,
       retainVersions: Int)(onTopK: (DataFrame, Long) => Unit): Unit = {
-    import graft.operators.IvfIndex
-    val spark = batch.sparkSession
     val ups = batch.filter(col(opCol) === "upsert").select(col(id), col(vec))
     val dels = batch.filter(col(opCol) === "delete").select(col(id))
-    if (!IvfIndex.exists(spark, indexDir) &&
-        IvfIndex.readMarker(spark, indexDir, "STREAM").isEmpty &&
-        ups.isEmpty) {
-      // pre-bootstrap: nothing to build centroids from — emit empty
-      // (deletes here reference nothing; dropped by contract)
-      onTopK(ups.limit(0)
-        .select(col(id).as("query_id"), lit(1).as("rnk"),
-          col(id).as("neighbor_id"), lit(0.0).as("cos")), batchId)
-      return
-    }
-    val (firstB, base) = IvfIndex.readMarker(spark, indexDir, "STREAM") match {
-      case Some(s) =>
-        val parts = s.split(" ")
-        (parts(0).toLong, parts(1).toInt)
-      case None =>
-        val bv = if (IvfIndex.exists(spark, indexDir))
-          IvfIndex.latestVersion(spark, indexDir) else 0
-        IvfIndex.writeMarker(spark, indexDir, "STREAM", s"$batchId $bv")
-        (batchId, bv)
-    }
-    require(batchId >= firstB,
-      s"batch id $batchId precedes this index's first stream batch " +
-        s"$firstB — the stream checkpoint was reset against an existing " +
-        "index; checkpoint and index are one unit of state (delete both " +
-        "or neither)")
-    val expected = base + (batchId - firstB).toInt + 1
-    val latest = if (IvfIndex.exists(spark, indexDir))
-      IvfIndex.latestVersion(spark, indexDir) else 0
-    def emitAt(version: Int): Unit = {
-      val out = IvfIndex.topKAt(spark, indexDir, version, ups, id, vec,
-        k, nProbe).persist()
-      out.count()
-      try onTopK(out, batchId)
-      finally out.unpersist()
-    }
-    if (latest == expected) {
-      emitAt(expected) // replayed batch: committed already, emit read-only
-    } else if (latest == expected - 1) {
-      if (latest == 0) IvfIndex.build(spark, ups, id, vec, indexDir, cfg)
-      else IvfIndex.applyCdc(spark, indexDir, ups, dels, id, vec, cfg)
-      emitAt(expected)
-      IvfIndex.gc(spark, indexDir, retainVersions)
-    } else {
-      throw new IllegalStateException(
-        s"index at $indexDir is at version $latest but batch $batchId " +
-          s"expects $expected (committed) or ${expected - 1} (fresh): " +
-          "stream checkpoint and index state disagree — one was deleted " +
-          "or rolled back without the other")
-    }
+    ivfBatch(ups, batchId, id, vec, indexDir, cfg, k, nProbe, retainVersions)(
+      graft.operators.IvfIndex.applyCdc(batch.sparkSession, indexDir, ups, dels, id,
+        vec, cfg))(onTopK)
   }
 
   /**
-   * Replay-safe streaming ingest for the persisted BM25 index — the
-   * retrieval sibling of [[annStreamIndexed]] (same pinned
-   * batch-id↔version pairing, same fail-fast divergence, same
-   * per-commit gc): each micro-batch of documents appends ONE index
-   * version, and `onTopK` receives the batch docs' bm25 top-k against
-   * the corpus as of arrival (corpus-so-far ∪ batch), read at the
-   * batch's own pinned version so a redelivered batch re-emits
-   * byte-identical results without double-appending.
+   * Streaming ingest for the persisted BM25 index — the retrieval
+   * sibling of [[annStreamIndexed]], with its replay and bootstrap:
+   * each micro-batch of documents appends ONE index version, and
+   * `onTopK` receives the batch docs' bm25 top-k against the corpus as
+   * of arrival (corpus-so-far ∪ batch), read at the batch's own
+   * version, so a redelivered batch re-emits byte-identical results.
    */
   def retrievalStreamIndexed(docs: DataFrame, id: String, text: String,
                              indexDir: String,
@@ -561,17 +401,11 @@ object Streams {
                                graft.functions.TextFunctions.tokens,
                              retainVersions: Int = 2)
                             (onTopK: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(retainVersions >= 2,
-      s"retainVersions must be >= 2 (replay needs the batch's own version): $retainVersions")
-    docs.writeStream.outputMode("append")
-      .option("checkpointLocation", checkpointLocation)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        retrievalIndexedBatch(batch, batchId, id, text, indexDir, cfg, k,
-          terms, retainVersions)(onTopK)
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    ReplayPin.start(docs, checkpointLocation, retainVersions) { (batch, batchId) =>
+      retrievalIndexedBatch(batch, batchId, id, text, indexDir, cfg, k,
+        terms, retainVersions)(onTopK)
+    }
 
   /** One micro-batch of [[retrievalStreamIndexed]] — factored out so
     * fault-injection tests can drive the exact production code path
@@ -582,36 +416,37 @@ object Streams {
       cfg: graft.operators.TermIndex.Config, k: Int,
       terms: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
       retainVersions: Int)(onTopK: (DataFrame, Long) => Unit): Unit = {
-    import graft.operators.TermIndex
-    val spark = batch.sparkSession
     val slim = batch.select(col(id), col(text))
-    def emptyOut: DataFrame = slim.limit(0)
-      .select(col(id).cast("long").as("probe_id"), lit(1L).as("rank"),
-        lit(0L).as("doc_id"), lit(0L).as("score"))
-    if (!TermIndex.exists(spark, indexDir) &&
-        TermIndex.readMarker(spark, indexDir, "STREAM").isEmpty &&
-        slim.isEmpty) {
-      onTopK(emptyOut, batchId) // quiet pre-bootstrap batch
+    termBatch(slim, batchId, id, text, indexDir, cfg, k, terms, retainVersions)(
+      graft.operators.TermIndex.append(batch.sparkSession, indexDir, slim, id, text,
+        cfg, terms))(onTopK)
+  }
+
+  /** The TermIndex wrappers' micro-batch: `rows` (id, text) commit as
+    * the build of v1 on the first non-empty batch and through `commit`
+    * after it, and get their bm25 top-k at the batch's own version. */
+  private def termBatch(rows: DataFrame, batchId: Long, id: String, text: String,
+                        indexDir: String, cfg: graft.operators.TermIndex.Config,
+                        k: Int,
+                        terms: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
+                        retainVersions: Int)(commit: => Unit)
+                       (onTopK: (DataFrame, Long) => Unit): Unit = {
+    import graft.operators.TermIndex
+    val spark = rows.sparkSession
+    if (!TermIndex.exists(spark, indexDir) && !ReplayPin.pinned(spark, indexDir) &&
+        rows.isEmpty) {
+      onTopK(rows.limit(0) // quiet pre-bootstrap batch
+        .select(col(id).cast("long").as("probe_id"), lit(1L).as("rank"),
+          lit(0L).as("doc_id"), lit(0L).as("score")), batchId)
       return
     }
-    val (firstB, base) = TermIndex.readMarker(spark, indexDir, "STREAM") match {
-      case Some(s) =>
-        val parts = s.split(" ")
-        (parts(0).toLong, parts(1).toInt)
-      case None =>
-        val bv = if (TermIndex.exists(spark, indexDir))
-          TermIndex.latestVersion(spark, indexDir) else 0
-        TermIndex.writeMarker(spark, indexDir, "STREAM", s"$batchId $bv")
-        (batchId, bv)
+    val b = ReplayPin.pin(spark, indexDir, batchId)(Seq(
+      if (TermIndex.exists(spark, indexDir)) TermIndex.latestVersion(spark, indexDir)
+      else 0))(onTopK)
+    if (!b.landed) {
+      if (b.committed() == 1) TermIndex.build(spark, rows, id, text, indexDir, cfg, terms)
+      else commit
     }
-    require(batchId >= firstB,
-      s"batch id $batchId precedes this index's first stream batch " +
-        s"$firstB — the stream checkpoint was reset against an existing " +
-        "index; checkpoint and index are one unit of state (delete both " +
-        "or neither)")
-    val expected = base + (batchId - firstB).toInt + 1
-    val latest = if (TermIndex.exists(spark, indexDir))
-      TermIndex.latestVersion(spark, indexDir) else 0
     // the emit probe is a SELF-PROBE: the batch's own documents against
     // the corpus — document-shaped by nature, so under the default
     // probe-cost gate any corpus with overlapping vocabulary would
@@ -621,40 +456,20 @@ object Streams {
     // so it always runs ungated; the caller's gate still applies to the
     // index's ad-hoc probe traffic.
     val emitCfg = cfg.copy(maxCandidateFraction = TermIndex.ExactUnbounded)
-    def emitAt(version: Int): Unit = {
-      val out = TermIndex.topKAt(spark, indexDir, version, slim, id, text,
-        k, emitCfg, terms).persist()
-      out.count()
-      try onTopK(out, batchId)
-      finally out.unpersist()
-    }
-    if (latest == expected) {
-      emitAt(expected) // replay: committed already — re-emit read-only
-    } else if (latest == expected - 1) {
-      if (latest == 0)
-        TermIndex.build(spark, slim, id, text, indexDir, cfg, terms)
-      else TermIndex.append(spark, indexDir, slim, id, text, cfg, terms)
-      emitAt(expected)
-      TermIndex.gc(spark, indexDir, retainVersions)
-    } else {
-      throw new IllegalStateException(
-        s"TermIndex at $indexDir is at version $latest but stream batch " +
-          s"$batchId expects $expected — " +
-          "stream checkpoint and index state disagree — one was deleted " +
-          "or rolled back without the other")
-    }
+    b.emit(TermIndex.topKAt(spark, indexDir, b.committed(), rows, id, text, k,
+      emitCfg, terms))
+    if (!b.landed) TermIndex.gc(spark, indexDir, retainVersions)
   }
 
   /**
-   * Replay-safe streaming CDC ingest for the BM25 index — the
-   * retrieval sibling of [[cdcStreamIndexed]]: micro-batches of
-   * (op, id, text) rows, op ∈ {"upsert", "delete"}, applied in ONE
-   * commit per batch ([[graft.operators.TermIndex.applyCdc]] — BM25
-   * stays exact over the resolved corpus). Same pinned
-   * batch-id↔version pairing, fail-fast divergence, per-commit gc.
-   * `onTopK` receives the batch's UPSERTED docs' top-k at the batch's
-   * own version; pre-bootstrap deletes are dropped with the quiet
-   * batch.
+   * Streaming CDC ingest for the BM25 index — the retrieval sibling of
+   * [[cdcStreamIndexed]]: micro-batches of (op, id, text) rows,
+   * op ∈ {"upsert", "delete"}, applied in ONE commit per batch
+   * ([[graft.operators.TermIndex.applyCdc]] — BM25 stays exact over the
+   * resolved corpus), under [[retrievalStreamIndexed]]'s replay and
+   * bootstrap. `onTopK` receives the batch's UPSERTED docs' top-k at
+   * the batch's own version; pre-bootstrap deletes are dropped with the
+   * quiet batch.
    */
   def cdcRetrievalStreamIndexed(events: DataFrame, opCol: String,
                                 id: String, text: String,
@@ -667,17 +482,11 @@ object Streams {
                                   graft.functions.TextFunctions.tokens,
                                 retainVersions: Int = 2)
                                (onTopK: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(retainVersions >= 2,
-      s"retainVersions must be >= 2 (replay needs the batch's own version): $retainVersions")
-    events.writeStream.outputMode("append")
-      .option("checkpointLocation", checkpointLocation)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        cdcRetrievalBatch(batch, batchId, opCol, id, text, indexDir, cfg,
-          k, terms, retainVersions)(onTopK)
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    ReplayPin.start(events, checkpointLocation, retainVersions) { (batch, batchId) =>
+      cdcRetrievalBatch(batch, batchId, opCol, id, text, indexDir, cfg,
+        k, terms, retainVersions)(onTopK)
+    }
 
   /** One micro-batch of [[cdcRetrievalStreamIndexed]] — factored out
     * for fault-injection tests, like [[retrievalIndexedBatch]]. */
@@ -687,68 +496,16 @@ object Streams {
       cfg: graft.operators.TermIndex.Config, k: Int,
       terms: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
       retainVersions: Int)(onTopK: (DataFrame, Long) => Unit): Unit = {
-    import graft.operators.TermIndex
-    val spark = batch.sparkSession
     val ups = batch.filter(col(opCol) === "upsert").select(col(id), col(text))
     val dels = batch.filter(col(opCol) === "delete").select(col(id))
-    def emptyOut: DataFrame = ups.limit(0)
-      .select(col(id).cast("long").as("probe_id"), lit(1L).as("rank"),
-        lit(0L).as("doc_id"), lit(0L).as("score"))
-    if (!TermIndex.exists(spark, indexDir) &&
-        TermIndex.readMarker(spark, indexDir, "STREAM").isEmpty &&
-        ups.isEmpty) {
-      onTopK(emptyOut, batchId) // quiet pre-bootstrap batch
-      return
-    }
-    val (firstB, base) = TermIndex.readMarker(spark, indexDir, "STREAM") match {
-      case Some(s) =>
-        val parts = s.split(" ")
-        (parts(0).toLong, parts(1).toInt)
-      case None =>
-        val bv = if (TermIndex.exists(spark, indexDir))
-          TermIndex.latestVersion(spark, indexDir) else 0
-        TermIndex.writeMarker(spark, indexDir, "STREAM", s"$batchId $bv")
-        (batchId, bv)
-    }
-    require(batchId >= firstB,
-      s"batch id $batchId precedes this index's first stream batch " +
-        s"$firstB — the stream checkpoint was reset against an existing " +
-        "index; checkpoint and index are one unit of state (delete both " +
-        "or neither)")
-    val expected = base + (batchId - firstB).toInt + 1
-    val latest = if (TermIndex.exists(spark, indexDir))
-      TermIndex.latestVersion(spark, indexDir) else 0
-    // self-probe emit runs ungated — see retrievalIndexedBatch (a
-    // document-shaped batch pricing above the gate would otherwise be a
-    // deterministic poison pill that halts the stream on every replay)
-    val emitCfg = cfg.copy(maxCandidateFraction = TermIndex.ExactUnbounded)
-    def emitAt(version: Int): Unit = {
-      val out = TermIndex.topKAt(spark, indexDir, version, ups, id, text,
-        k, emitCfg, terms).persist()
-      out.count()
-      try onTopK(out, batchId)
-      finally out.unpersist()
-    }
-    if (latest == expected) {
-      emitAt(expected) // replay: committed already — re-emit read-only
-    } else if (latest == expected - 1) {
-      if (latest == 0)
-        TermIndex.build(spark, ups, id, text, indexDir, cfg, terms)
-      else TermIndex.applyCdc(spark, indexDir, ups, dels, id, text, cfg, terms)
-      emitAt(expected)
-      TermIndex.gc(spark, indexDir, retainVersions)
-    } else {
-      throw new IllegalStateException(
-        s"TermIndex at $indexDir is at version $latest but stream batch " +
-          s"$batchId expects $expected — " +
-          "stream checkpoint and index state disagree — one was deleted " +
-          "or rolled back without the other")
-    }
+    termBatch(ups, batchId, id, text, indexDir, cfg, k, terms, retainVersions)(
+      graft.operators.TermIndex.applyCdc(batch.sparkSession, indexDir, ups, dels, id,
+        text, cfg, terms))(onTopK)
   }
 
   /**
-   * Replay-safe streaming CDC ingest for the near-dup
-   * [[graft.operators.MinhashIndex]] — the missing third face of
+   * Streaming CDC ingest for the near-dup
+   * [[graft.operators.MinhashIndex]] — the third face of
    * [[cdcStreamIndexed]]/[[cdcRetrievalStreamIndexed]]: micro-batches
    * of (op, id, text) rows, op ∈ {"upsert", "delete"}. Each batch is
    * TWO commits — a cheap tombstone delete covering the deleted AND
@@ -759,16 +516,13 @@ object Streams {
    * An id in both sets resolves delete-wins (dropped from the
    * upserts), matching the sibling applyCdc contract.
    *
-   * Redelivery arithmetic therefore strides by 2: batch b owns
-   * versions `base + 2(b − firstB) + {1, 2}`. The three live states —
-   * fresh (run both), torn (delete committed, ingest not: tombstoning
-   * the same ids again is a no-op by construction, so recovery just
-   * runs the ingest), and replayed (both committed: re-probe the
-   * delete version read-only, identical pairs re-emitted) — are
-   * distinguished by LATEST alone; anything else fails fast.
-   * [[graft.operators.MinhashIndex.gc]] keeps the replay window AND
-   * (automatically) the BASE version a retained tombstone commit
-   * still references.
+   * Replay (README "Streaming replay contract") therefore has stride 2:
+   * batch b owns versions `base + 2(b − firstB) + {1, 2}`. A torn
+   * delivery (delete committed, ingest not) runs the ingest alone:
+   * tombstoning the same ids again would be a no-op by construction.
+   * A redelivered batch re-probes its delete version read-only, which
+   * references its base, so `retainVersions` is at least 3;
+   * [[graft.operators.MinhashIndex.gc]] keeps that base automatically.
    */
   def cdcNearDupStream(events: DataFrame, opCol: String, id: String,
                        text: String, indexDir: String,
@@ -777,18 +531,12 @@ object Streams {
                          graft.operators.MinhashIndex.Config(),
                        retainVersions: Int = 3)
                       (onPairs: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(retainVersions >= 3,
-      "retainVersions must be >= 3 (replay re-probes the batch's delete " +
-        s"version, which references its base): $retainVersions")
-    events.writeStream.outputMode("append")
-      .option("checkpointLocation", checkpointLocation)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    ReplayPin.start(events, checkpointLocation, retainVersions, minRetain = 3) {
+      (batch, batchId) =>
         cdcNearDupBatch(batch, batchId, opCol, id, text, indexDir, cfg,
           retainVersions)(onPairs)
-      }
-      .start()
-  }
+    }
 
   /** One micro-batch of [[cdcNearDupStream]] — factored out for
     * fault-injection tests, like its siblings. */
@@ -806,51 +554,22 @@ object Streams {
         "left_anti")
     if (!MinhashIndex.exists(spark, indexDir))
       MinhashIndex.build(spark, ups.limit(0), id, text, indexDir, cfg)
-    val (firstB, base) =
-      MinhashIndex.readMarker(spark, indexDir, "STREAM") match {
-        case Some(s) =>
-          val parts = s.split(" ")
-          (parts(0).toLong, parts(1).toInt)
-        case None =>
-          val bv = MinhashIndex.latestVersion(spark, indexDir)
-          MinhashIndex.writeMarker(spark, indexDir, "STREAM", s"$batchId $bv")
-          (batchId, bv)
-      }
-    require(batchId >= firstB,
-      s"batch id $batchId precedes this index's first stream batch " +
-        s"$firstB — the stream checkpoint was reset against an existing " +
-        "index; checkpoint and index are one unit of state (delete both " +
-        "or neither)")
-    // two commits per batch: delVer = tombstone, delVer + 1 = ingest
-    val delVer = base + 2 * (batchId - firstB).toInt + 1
-    val latest = MinhashIndex.latestVersion(spark, indexDir)
-    // the tombstone must cover replaced ids too — old copies of an
-    // upserted doc stop pairing before the new text ingests
-    val allDead = dels.unionByName(ups.select(col(id)))
-    if (latest == delVer + 1) {
-      // fully replayed: re-probe the version the ingest ran against
-      val p = MinhashIndex.replayDupPairsAt(spark, indexDir, delVer, ups,
-        id, text, cfg)
-      try onPairs(p, batchId)
-      finally p.unpersist()
-    } else if (latest == delVer - 1 || latest == delVer) {
-      if (latest == delVer - 1) {
-        val got = MinhashIndex.deleteFromIndex(spark, indexDir, allDead,
-          id, cfg)
+    val b = ReplayPin.pin(spark, indexDir, batchId, stride = 2)(
+      Seq(MinhashIndex.latestVersion(spark, indexDir)))(onPairs)
+    val delVer = b.committed() - 1 // the tombstone commit; the ingest's is next
+    if (b.landed) // re-probe the version the ingest ran against
+      b.deliver(MinhashIndex.replayDupPairsAt(spark, indexDir, delVer, ups, id,
+        text, cfg))
+    else {
+      if (b.landing == Seq(ReplayPin.Fresh)) {
+        // the tombstone must cover replaced ids too — old copies of an
+        // upserted doc stop pairing before the new text ingests
+        val got = MinhashIndex.deleteFromIndex(spark, indexDir,
+          dels.unionByName(ups.select(col(id))), id, cfg)
         require(got == delVer, s"delete committed $got, expected $delVer")
       }
-      // torn redelivery lands here with the delete already committed;
-      // its ids are already tombstoned, so only the ingest remains
-      val p = MinhashIndex.ingest(spark, indexDir, ups, id, text, cfg)
-      try onPairs(p, batchId)
-      finally p.unpersist()
+      b.deliver(MinhashIndex.ingest(spark, indexDir, ups, id, text, cfg))
       MinhashIndex.gc(spark, indexDir, retainVersions)
-    } else {
-      throw new IllegalStateException(
-        s"MinhashIndex at $indexDir is at version $latest but CDC batch " +
-          s"$batchId expects ${delVer - 1} (fresh), $delVer (torn) or " +
-          s"${delVer + 1} (committed): stream checkpoint and index state " +
-          "disagree — one was deleted or rolled back without the other")
     }
   }
 
@@ -908,15 +627,11 @@ object Streams {
    * folds its novel canonicals into the index in one committed
    * version.
    *
-   * Same at-least-once redelivery contract as the three sibling
-   * wrappers: first contact pins `(firstBatchId, baseVersion)` as an
-   * atomic `STREAM` marker BEFORE the first commit, batch b is
-   * expected to commit `base + (b - firstB) + 1` (quiet all-dup
-   * batches still advance the version, keeping the pairing aligned),
-   * a replayed batch re-emits read-only by probing the PRE-ingest
-   * version (`dupPairsAt(expected - 1)` — exactly what its original
-   * ingest computed), and any other mismatch fails fast: checkpoint
-   * and index are one unit of state.
+   * Replay (README "Streaming replay contract"): one commit per batch,
+   * quiet all-dup batches included, over an empty index bootstrapped
+   * on first contact. A redelivered batch re-emits read-only by
+   * probing the PRE-ingest version (`dupPairsAt`), exactly what its
+   * original ingest computed.
    */
   def exactDedupStreamIndexed(docs: DataFrame, id: String, text: String,
                               indexDir: String,
@@ -925,17 +640,11 @@ object Streams {
                                 graft.operators.DigestIndex.Config(),
                               retainVersions: Int = 2)
                              (onPairs: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(retainVersions >= 2,
-      s"retainVersions must be >= 2 (replay needs the prior version): $retainVersions")
-    docs.writeStream.outputMode("append")
-      .option("checkpointLocation", checkpointLocation)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        exactDedupIndexedBatch(batch, batchId, id, text, indexDir, cfg,
-          retainVersions)(onPairs)
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    ReplayPin.start(docs, checkpointLocation, retainVersions) { (batch, batchId) =>
+      exactDedupIndexedBatch(batch, batchId, id, text, indexDir, cfg,
+        retainVersions)(onPairs)
+    }
 
   /** One micro-batch of [[exactDedupStreamIndexed]] — factored out so
     * fault-injection tests can drive the exact production code path
@@ -948,51 +657,26 @@ object Streams {
     import graft.operators.DigestIndex
     val spark = batch.sparkSession
     val slim = batch.select(col(id), col(text))
-    // bootstrap: an empty index (v1) — the first ingest's probe yields
-    // exactly the batch-internal dup pairs
+    val b = digestPin(spark, batchId, indexDir, cfg)(onPairs)
+    if (b.landed)
+      b.emit(DigestIndex.dupPairsAt(spark, indexDir, b.committed() - 1, slim, id, text, cfg))
+    else {
+      b.deliver(DigestIndex.ingest(spark, indexDir, slim, id, text, cfg))
+      DigestIndex.gc(spark, indexDir, retainVersions)
+    }
+  }
+
+  /** The DigestIndex wrappers' pin, over an empty index (v1) created
+    * on first contact: the first batch's probe then yields exactly the
+    * batch-internal dup pairs. */
+  private def digestPin(spark: SparkSession, batchId: Long, indexDir: String,
+                        cfg: graft.operators.DigestIndex.Config)
+                       (onPairs: (DataFrame, Long) => Unit): ReplayPin.Batch = {
+    import graft.operators.DigestIndex
     if (!DigestIndex.exists(spark, indexDir))
       DigestIndex.create(spark, indexDir, cfg)
-    val (firstB, base) =
-      DigestIndex.readMarker(spark, indexDir, "STREAM") match {
-        case Some(s) =>
-          val parts = s.split(" ")
-          (parts(0).toLong, parts(1).toInt)
-        case None =>
-          // pin the pairing before any ingest; idempotent under
-          // redelivery (a crash after the marker but before the ingest
-          // recomputes the same pair)
-          val bv = DigestIndex.latestVersion(spark, indexDir)
-          DigestIndex.writeMarker(spark, indexDir, "STREAM", s"$batchId $bv")
-          (batchId, bv)
-      }
-    require(batchId >= firstB,
-      s"batch id $batchId precedes this index's first stream batch " +
-        s"$firstB — the stream checkpoint was reset against an existing " +
-        "index; checkpoint and index are one unit of state (delete both " +
-        "or neither)")
-    val expected = base + (batchId - firstB).toInt + 1
-    val latest = DigestIndex.latestVersion(spark, indexDir)
-    if (latest == expected) {
-      // replayed batch: its ingest already committed — re-emit the
-      // identical pairs read-only against the PRE-ingest version,
-      // never double-ingest
-      val p = DigestIndex.dupPairsAt(spark, indexDir, expected - 1, slim,
-        id, text, cfg).persist()
-      p.count()
-      try onPairs(p, batchId)
-      finally p.unpersist()
-    } else if (latest == expected - 1) {
-      val p = DigestIndex.ingest(spark, indexDir, slim, id, text, cfg)
-      try onPairs(p, batchId)
-      finally p.unpersist() // one cache generation per batch otherwise
-      DigestIndex.gc(spark, indexDir, retainVersions)
-    } else {
-      throw new IllegalStateException(
-        s"index at $indexDir is at version $latest but batch $batchId " +
-          s"expects $expected (committed) or ${expected - 1} (fresh): " +
-          "stream checkpoint and index state disagree — one was deleted " +
-          "or rolled back without the other")
-    }
+    ReplayPin.pin(spark, indexDir, batchId)(
+      Seq(DigestIndex.latestVersion(spark, indexDir)))(onPairs)
   }
 
   /**
@@ -1002,9 +686,8 @@ object Streams {
    * [[cdcNearDupStream]]): micro-batches of `(op, id, text)` events
    * (`op` ∈ upsert/delete, delete-wins on a same-batch conflict) apply
    * as ONE DigestIndex.applyCdc commit each, emitting the surviving
-   * upserts' dup pairs as of arrival. Same pinned batch↔version replay
-   * contract as [[exactDedupStreamIndexed]]: redelivery applies
-   * nothing and re-emits identically via
+   * upserts' dup pairs as of arrival. Replay and bootstrap as
+   * [[exactDedupStreamIndexed]]: a redelivered batch re-emits via
    * [[graft.operators.DigestIndex.cdcPairsAt]] against the PRE-CDC
    * version.
    */
@@ -1015,17 +698,11 @@ object Streams {
                             graft.operators.DigestIndex.Config(),
                           retainVersions: Int = 2)
                          (onPairs: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(retainVersions >= 2,
-      s"retainVersions must be >= 2 (replay needs the prior version): $retainVersions")
-    events.writeStream.outputMode("append")
-      .option("checkpointLocation", checkpointLocation)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        cdcExactDedupBatch(batch, batchId, opCol, id, text, indexDir, cfg,
-          retainVersions)(onPairs)
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    ReplayPin.start(events, checkpointLocation, retainVersions) { (batch, batchId) =>
+      cdcExactDedupBatch(batch, batchId, opCol, id, text, indexDir, cfg,
+        retainVersions)(onPairs)
+    }
 
   /** One micro-batch of [[cdcExactDedupStream]] — factored out so
     * fault-injection tests drive the production path directly. */
@@ -1038,74 +715,36 @@ object Streams {
     val spark = batch.sparkSession
     val ups = batch.filter(col(opCol) === "upsert").select(col(id), col(text))
     val dels = batch.filter(col(opCol) === "delete").select(col(id))
-    if (!DigestIndex.exists(spark, indexDir))
-      DigestIndex.create(spark, indexDir, cfg)
-    val (firstB, base) =
-      DigestIndex.readMarker(spark, indexDir, "STREAM") match {
-        case Some(s) =>
-          val parts = s.split(" ")
-          (parts(0).toLong, parts(1).toInt)
-        case None =>
-          val bv = DigestIndex.latestVersion(spark, indexDir)
-          DigestIndex.writeMarker(spark, indexDir, "STREAM", s"$batchId $bv")
-          (batchId, bv)
-      }
-    require(batchId >= firstB,
-      s"batch id $batchId precedes this index's first stream batch " +
-        s"$firstB — the stream checkpoint was reset against an existing " +
-        "index; checkpoint and index are one unit of state (delete both " +
-        "or neither)")
-    val expected = base + (batchId - firstB).toInt + 1
-    val latest = DigestIndex.latestVersion(spark, indexDir)
-    if (latest == expected) {
-      // replayed batch: re-emit the identical pairs read-only against
-      // the PRE-CDC version, never double-apply
-      val p = DigestIndex.cdcPairsAt(spark, indexDir, expected - 1, ups,
-        dels, id, text, cfg).persist()
-      p.count()
-      try onPairs(p, batchId)
-      finally p.unpersist()
-    } else if (latest == expected - 1) {
-      val p = DigestIndex.applyCdc(spark, indexDir, ups, dels, id, text, cfg)
-      try onPairs(p, batchId)
-      finally p.unpersist()
+    val b = digestPin(spark, batchId, indexDir, cfg)(onPairs)
+    if (b.landed)
+      b.emit(DigestIndex.cdcPairsAt(spark, indexDir, b.committed() - 1, ups, dels, id,
+        text, cfg))
+    else {
+      b.deliver(DigestIndex.applyCdc(spark, indexDir, ups, dels, id, text, cfg))
       DigestIndex.gc(spark, indexDir, retainVersions)
-    } else {
-      throw new IllegalStateException(
-        s"index at $indexDir is at version $latest but batch $batchId " +
-          s"expects $expected (committed) or ${expected - 1} (fresh): " +
-          "stream checkpoint and index state disagree — one was deleted " +
-          "or rolled back without the other")
     }
   }
 
   /** Maintain a persisted [[graft.operators.Ivm]] aggregate view from a
-    * CDC stream — the fifth streaming-maintained family, under the
-    * index wrappers' contract: one z-set+view commit per micro-batch,
-    * batch↔version pairing pinned by a STREAM marker, redelivered
-    * batches RE-EMIT read-only against the pinned version (never
-    * double-apply), per-batch gc at `retainVersions`. `opCol` is
-    * "insert" | "delete"; delete rows carry BEFORE-IMAGES (the
-    * standard CDC contract — an update is delete(old)+insert(new)).
-    * A crash between the view's two inner commits self-heals on the
-    * replay path (rebuildView), so exactly-once is by idempotence.
-    * `onRefresh` receives the refreshed view rows of the batch's
-    * touched groups (live groups only) and the batch id. The view must
-    * already exist ([[graft.operators.Ivm.create]] — a stream cannot
-    * invent the view definition). */
+    * CDC stream — the fifth streaming-maintained family: one
+    * z-set+view commit per micro-batch, paired by its z-set version
+    * (README "Streaming replay contract"); the emit reads the batch's
+    * own z-set version. `opCol` is "insert" | "delete"; delete rows
+    * carry BEFORE-IMAGES (the standard CDC contract — an update is
+    * delete(old)+insert(new)). A crash between the view's two inner
+    * commits self-heals (rebuildView) before the batch commits or
+    * re-emits, so exactly-once is by idempotence. `onRefresh` receives
+    * the refreshed view rows of the batch's touched groups (live groups
+    * only) and the batch id. The view must already exist
+    * ([[graft.operators.Ivm.create]] — a stream cannot invent the view
+    * definition). */
   def cdcViewStream(events: DataFrame, opCol: String, viewDir: String,
                     checkpointLocation: String, retainVersions: Int = 2)
                    (onRefresh: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(retainVersions >= 2,
-      s"retainVersions must be >= 2 (replay needs the prior version): $retainVersions")
-    events.writeStream.outputMode("append")
-      .option("checkpointLocation", checkpointLocation)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        cdcViewBatch(batch, batchId, opCol, viewDir, retainVersions)(onRefresh)
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    ReplayPin.start(events, checkpointLocation, retainVersions) { (batch, batchId) =>
+      cdcViewBatch(batch, batchId, opCol, viewDir, retainVersions)(onRefresh)
+    }
 
   /** One micro-batch of [[cdcViewStream]] — factored out so
     * fault-injection tests drive the production path directly. */
@@ -1133,93 +772,49 @@ object Streams {
         "'insert'/'delete' — this view's CDC contract is insert/delete " +
         "with before-images (an index wrapper's upsert feed must be " +
         "mapped upstream); nothing was applied")
-    val ins = batch.filter(col(opCol) === "insert").drop(opCol)
-    val dels = batch.filter(col(opCol) === "delete").drop(opCol)
-    val (firstB, base) = Ivm.readMarker(spark, viewDir, "STREAM") match {
-      case Some(s) =>
-        val parts = s.split(" ")
-        (parts(0).toLong, parts(1).toInt)
-      case None =>
-        val bv = Ivm.latestVersion(spark, viewDir)
-        Ivm.writeMarker(spark, viewDir, "STREAM", s"$batchId $bv")
-        (batchId, bv)
-    }
-    require(batchId >= firstB,
-      s"batch id $batchId precedes this view's first stream batch " +
-        s"$firstB — the stream checkpoint was reset against an existing " +
-        "view; checkpoint and view are one unit of state (delete both " +
-        "or neither)")
-    val expected = base + (batchId - firstB).toInt + 1
-    val latest = Ivm.latestVersion(spark, viewDir)
-    if (latest == expected) {
-      // replayed batch: the z-set commit already landed. The view may
-      // lag it if the crash hit between the two inner commits — repair
-      // first, then re-emit READ-ONLY against the pinned version (the
-      // identical rows the original refresh emitted).
-      if (Ivm.viewStale(spark, viewDir)) Ivm.rebuildView(spark, viewDir)
-      val rows = Ivm.groupsAt(spark, viewDir, expected,
-        batch.drop(opCol)).persist()
-      rows.count()
-      try onRefresh(rows, batchId) finally rows.unpersist()
-    } else if (latest == expected - 1) {
-      // the z-set did not land — but the VIEW may have (the two inner
-      // commits run concurrently since round 14): repair before
-      // re-applying, applyDelta refuses a mismatched VIEWSYNC pair
-      if (Ivm.viewStale(spark, viewDir)) Ivm.rebuildView(spark, viewDir)
-      Ivm.applyDelta(spark, viewDir, ins, dels)
-      val rows = Ivm.groupsAt(spark, viewDir, expected,
-        batch.drop(opCol)).persist()
-      rows.count()
-      try onRefresh(rows, batchId) finally rows.unpersist()
-      Ivm.gc(spark, viewDir, retainVersions)
-    } else {
-      throw new IllegalStateException(
-        s"view at $viewDir is at z-set version $latest but batch " +
-          s"$batchId expects $expected (committed) or ${expected - 1} " +
-          "(fresh): stream checkpoint and view state disagree — one was " +
-          "deleted or rolled back without the other")
-    }
+    val b = ReplayPin.pin(spark, viewDir, batchId, counters = Seq("z-set version"))(
+      Seq(Ivm.latestVersion(spark, viewDir)))(onRefresh)
+    // the view may lag the z-set (a crash between the two inner
+    // commits) or lead it (they run concurrently): repair first — a
+    // replay then re-emits the rows the original refresh emitted, and
+    // applyDelta refuses a mismatched VIEWSYNC pair
+    if (Ivm.viewStale(spark, viewDir)) Ivm.rebuildView(spark, viewDir)
+    if (!b.landed) Ivm.applyDelta(spark, viewDir,
+      batch.filter(col(opCol) === "insert").drop(opCol),
+      batch.filter(col(opCol) === "delete").drop(opCol))
+    b.emit(Ivm.groupsAt(spark, viewDir, b.committed(), batch.drop(opCol)))
+    if (!b.landed) Ivm.gc(spark, viewDir, retainVersions)
   }
 
   /** Maintain a persisted [[graft.operators.JoinIvm]] join-rollup view
     * from a two-sided CDC stream — the sixth streaming-maintained
-    * family, under the same contract as [[cdcViewStream]]: one
-    * composite commit per micro-batch, batch↔version pairing pinned by
-    * a STREAM marker (each batch advances BOTH side z-sets by exactly
-    * one), redelivered batches RE-EMIT read-only against the pinned
-    * versions (never double-apply), per-batch gc. Events carry
-    * `sideCol` ∈ "fact" | "dim" and `opCol` ∈ "insert" | "delete"
-    * (deletes with BEFORE-IMAGES; an update is delete(old) +
-    * insert(new)); each row must carry its side's z-set columns
-    * ([[graft.operators.JoinIvm.sideCols]]) — the other side's
-    * columns are ignored for that row.
+    * family: one composite commit per micro-batch, paired by BOTH side
+    * z-set versions, each advanced by exactly one per batch (README
+    * "Streaming replay contract"); the emit reads the batch's own
+    * side versions. Events carry `sideCol` ∈ "fact" | "dim" and
+    * `opCol` ∈ "insert" | "delete" (deletes with BEFORE-IMAGES; an
+    * update is delete(old) + insert(new)); each row must carry its
+    * side's z-set columns ([[graft.operators.JoinIvm.sideCols]]) — the
+    * other side's columns are ignored for that row.
     *
     * Crash self-heal over the three-table INFLIGHT window: a batch
-    * interrupted between the fact and dim commits is detected by the
-    * version arithmetic on redelivery (fact at the committed level,
-    * dim one behind), repaired with [[graft.operators.JoinIvm
-    * .rebuildView]], and RESUMED by folding only the side that did
-    * not land — the batch still consumes exactly one version per
-    * side, so the pairing stays arithmetic. A crash between the dim
-    * and view commits self-heals the same way the fifth family does
-    * (rebuildView on the replay path). Exactly-once is by idempotence.
-    * `onRefresh` receives the refreshed view rows of the batch's
-    * touched groups (live groups only) and the batch id. */
+    * interrupted between the two side commits reads as one side landed
+    * and the other not, is repaired with [[graft.operators.JoinIvm
+    * .rebuildView]], and is RESUMED by folding only the side that did
+    * not land — the batch still consumes exactly one version per side.
+    * A crash between the dim and view commits self-heals on the replay
+    * path (rebuildView). Exactly-once is by idempotence. `onRefresh`
+    * receives the refreshed view rows of the batch's touched groups
+    * (live groups only) and the batch id. */
   def cdcJoinViewStream(events: DataFrame, opCol: String, sideCol: String,
                         viewDir: String, checkpointLocation: String,
                         retainVersions: Int = 2)
                        (onRefresh: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(retainVersions >= 2,
-      s"retainVersions must be >= 2 (replay needs the prior version): $retainVersions")
-    events.writeStream.outputMode("append")
-      .option("checkpointLocation", checkpointLocation)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        cdcJoinViewBatch(batch, batchId, opCol, sideCol, viewDir,
-          retainVersions)(onRefresh)
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    ReplayPin.start(events, checkpointLocation, retainVersions) { (batch, batchId) =>
+      cdcJoinViewBatch(batch, batchId, opCol, sideCol, viewDir,
+        retainVersions)(onRefresh)
+    }
 
   /** One micro-batch of [[cdcJoinViewStream]] — factored out so
     * fault-injection tests drive the production path directly. */
@@ -1232,9 +827,58 @@ object Streams {
     require(JoinIvm.exists(spark, viewDir),
       s"no JoinIvm view at $viewDir — create it (spec + side schemas) " +
         "before starting the stream")
-    // fail LOUDLY on op/side values outside the contract — a quiet
-    // partial batch would leave the view silently wrong forever
-    // (NULL-safe: null op/side would make !isin NULL → silently dropped)
+    val Seq(fi, fd, di, dd) = twoSided(batch, opCol, sideCol,
+      JoinIvm.sideCols(spark, viewDir))
+    val b = ReplayPin.pin(spark, viewDir, batchId, counters = SideCounters)({
+      val (fv, dv) = JoinIvm.latestVersions(spark, viewDir)
+      Seq(fv, dv)
+    })(onRefresh)
+    b.landing match {
+      case _ if b.landed =>
+        // the view may lag (crash between dim and view commits, or
+        // mid-view): repair, then re-emit READ-ONLY
+        if (JoinIvm.viewStale(spark, viewDir))
+          JoinIvm.rebuildView(spark, viewDir)
+        else if (JoinIvm.inflight(spark, viewDir))
+          // refresh completed through VIEWSYNC but crashed before the
+          // marker delete: the view is provably consistent — clear it
+          graft.operators.VersionedLayout.fs(spark, viewDir)
+            .delete(new org.apache.hadoop.fs.Path(viewDir, "INFLIGHT"), false)
+      case Seq(ReplayPin.Fresh, ReplayPin.Fresh) =>
+        // a leftover INFLIGHT with nothing of THIS batch landed (crash
+        // between the marker write and the first fold) is cleared by
+        // the same repair applyDelta would demand
+        if (JoinIvm.inflight(spark, viewDir) ||
+            JoinIvm.viewStale(spark, viewDir))
+          JoinIvm.rebuildView(spark, viewDir)
+        JoinIvm.applyDelta(spark, viewDir, fi, fd, di, dd)
+      case Seq(fact, dim) =>
+        // one side landed (the side folds commit concurrently, so
+        // either can be the one): rebuildView restores view↔z-set
+        // consistency (and clears the marker); the RESUME fold applies
+        // only the missing side — the landed side's delta still
+        // participates in the view delta algebraically (F = F′ − ΔF),
+        // and ΔD = 0 makes the bilinear formula apply exactly the
+        // remaining ΔF ⋈ D′ term (and mirrored)
+        JoinIvm.rebuildView(spark, viewDir)
+        JoinIvm.applyDeltaFolding(spark, viewDir, fi, fd, di, dd,
+          foldFact = fact == ReplayPin.Fresh, foldDim = dim == ReplayPin.Fresh)
+    }
+    b.emit(JoinIvm.groupsAt(spark, viewDir, b.committed(0), b.committed(1),
+      fi, fd, di, dd))
+    if (!b.landed) JoinIvm.gc(spark, viewDir, retainVersions)
+  }
+
+  private val SideCounters = Seq("fact z-set version", "dim z-set version")
+
+  /** A two-sided CDC batch split into fact inserts, fact deletes, dim
+    * inserts and dim deletes, each projected onto its side's columns.
+    * Fails LOUDLY on op/side values outside the contract: a quiet
+    * partial batch would leave the view silently wrong forever
+    * (NULL-safe: a null op/side would make !isin NULL → silently
+    * dropped). */
+  private def twoSided(batch: DataFrame, opCol: String, sideCol: String,
+                       cols: (Seq[String], Seq[String])): Seq[DataFrame] = {
     val bad = batch.filter(
       !coalesce(col(opCol).isin("insert", "delete"), lit(false)) ||
       !coalesce(col(sideCol).isin("fact", "dim"), lit(false))).count()
@@ -1242,108 +886,22 @@ object Streams {
       s"$bad batch rows carry an op outside 'insert'/'delete' or a " +
         "side outside 'fact'/'dim' — this view's CDC contract is " +
         "two-sided insert/delete with before-images; nothing was applied")
-    val (fCols, dCols) = JoinIvm.sideCols(spark, viewDir)
-    def part(side: String, op: String, cols: Seq[String]): DataFrame =
-      batch.filter(col(sideCol) === side && col(opCol) === op)
-        .select(cols.map(col): _*)
-    val fi = part("fact", "insert", fCols)
-    val fd = part("fact", "delete", fCols)
-    val di = part("dim", "insert", dCols)
-    val dd = part("dim", "delete", dCols)
-    val (firstB, baseF, baseD) =
-      JoinIvm.readMarker(spark, viewDir, "STREAM") match {
-        case Some(s) =>
-          val p = s.split(" ")
-          (p(0).toLong, p(1).toInt, p(2).toInt)
-        case None =>
-          val (bf, bd) = JoinIvm.latestVersions(spark, viewDir)
-          JoinIvm.writeMarker(spark, viewDir, "STREAM", s"$batchId $bf $bd")
-          (batchId, bf, bd)
-      }
-    require(batchId >= firstB,
-      s"batch id $batchId precedes this view's first stream batch " +
-        s"$firstB — the stream checkpoint was reset against an existing " +
-        "view; checkpoint and view are one unit of state (delete both " +
-        "or neither)")
-    val off = (batchId - firstB).toInt
-    val (expF, expD) = (baseF + off + 1, baseD + off + 1)
-    val (fv, dv) = JoinIvm.latestVersions(spark, viewDir)
-    def emit(): Unit = {
-      val rows = JoinIvm.groupsAt(spark, viewDir, expF, expD,
-        fi, fd, di, dd).persist()
-      rows.count()
-      try onRefresh(rows, batchId) finally rows.unpersist()
-    }
-    if (fv == expF && dv == expD) {
-      // replayed batch, both sides landed: the view may lag (crash
-      // between dim and view commits, or mid-view) — repair, then
-      // re-emit READ-ONLY against the pinned versions
-      if (JoinIvm.viewStale(spark, viewDir))
-        JoinIvm.rebuildView(spark, viewDir)
-      else if (JoinIvm.inflight(spark, viewDir))
-        // refresh completed through VIEWSYNC but crashed before the
-        // marker delete: the view is provably consistent — clear it
-        graft.operators.VersionedLayout.fs(spark, viewDir)
-          .delete(new org.apache.hadoop.fs.Path(viewDir, "INFLIGHT"), false)
-      emit()
-    } else if (fv == expF - 1 && dv == expD - 1) {
-      // fresh batch. A leftover INFLIGHT with nothing of THIS batch
-      // landed (crash between the marker write and the first fold) is
-      // cleared by the same repair applyDelta would demand.
-      if (JoinIvm.inflight(spark, viewDir) ||
-          JoinIvm.viewStale(spark, viewDir))
-        JoinIvm.rebuildView(spark, viewDir)
-      JoinIvm.applyDelta(spark, viewDir, fi, fd, di, dd)
-      emit()
-      JoinIvm.gc(spark, viewDir, retainVersions)
-    } else if (fv == expF && dv == expD - 1) {
-      // the three-commit INFLIGHT window: fact folded, dim did not.
-      // rebuildView restores view↔z-set consistency (and clears the
-      // marker); the RESUME fold applies only the dim side — ΔF still
-      // participates in the view delta algebraically (F = F′ − ΔF),
-      // and the batch consumes exactly one version per side.
-      JoinIvm.rebuildView(spark, viewDir)
-      JoinIvm.applyDeltaFolding(spark, viewDir, fi, fd, di, dd,
-        foldFact = false, foldDim = true)
-      emit()
-      JoinIvm.gc(spark, viewDir, retainVersions)
-    } else if (fv == expF - 1 && dv == expD) {
-      // the SYMMETRIC window — possible since the side folds commit
-      // concurrently (r13): dim landed, fact did not. Same recovery,
-      // mirrored: rebuild, then fold only the fact side (ΔD = 0 makes
-      // the bilinear formula apply exactly the remaining ΔF ⋈ D′ term).
-      JoinIvm.rebuildView(spark, viewDir)
-      JoinIvm.applyDeltaFolding(spark, viewDir, fi, fd, di, dd,
-        foldFact = true, foldDim = false)
-      emit()
-      JoinIvm.gc(spark, viewDir, retainVersions)
-    } else {
-      throw new IllegalStateException(
-        s"view at $viewDir is at z-set versions ($fv, $dv) but batch " +
-          s"$batchId expects ($expF, $expD) committed, " +
-          s"(${expF - 1}, ${expD - 1}) fresh, or ($expF, ${expD - 1}) / " +
-          s"(${expF - 1}, $expD) interrupted: stream checkpoint and " +
-          "view state disagree — one was deleted or rolled back " +
-          "without the other")
-    }
+    for ((side, sc) <- Seq("fact" -> cols._1, "dim" -> cols._2); op <- Seq("insert", "delete"))
+      yield batch.filter(col(sideCol) === side && col(opCol) === op).select(sc.map(col): _*)
   }
 
   /** Maintain a persisted [[graft.operators.IvmOverJoin]] view — the
     * maintained join with the FULL aggregate set (min / max /
     * count-distinct exact under retraction) — from a two-sided CDC
-    * stream: the SEVENTH streaming-maintained family, under the same
-    * contract as [[cdcJoinViewStream]]. Events carry `sideCol` ∈
-    * "fact" | "dim" and `opCol` ∈ "insert" | "delete" (deletes with
-    * BEFORE-IMAGES); each row must carry its side's z-set columns
-    * ([[graft.operators.IvmOverJoin.sideCols]]).
+    * stream: the SEVENTH streaming-maintained family, with
+    * [[cdcJoinViewStream]]'s events and pairing.
     *
     * This view's refresh is the LONGEST commit chain of the family —
     * factz, dimz (concurrent), then the inner Ivm's z-set AND view —
-    * so its crash window set is the widest. Pairing is arithmetic on
-    * the two SIDE versions only (each batch advances both by exactly
-    * one); the inner Ivm's versions float (recovery rebuilds consume
-    * extra ones) and the pinned re-emit reads the inner version the
-    * SYNC marker records. Redelivery states: both sides landed →
+    * so its crash window set is the widest. Pairing is on the two SIDE
+    * versions only; the inner Ivm's versions float (recovery rebuilds
+    * consume extra ones) and the pinned re-emit reads the inner version
+    * the SYNC marker records. Both sides landed →
     * [[graft.operators.IvmOverJoin.heal]] (which tells apart "joined
     * delta never landed" / "inner view lags" / "bookkeeping only" via
     * the INFLIGHT marker's recorded pre-version) then a read-only
@@ -1357,17 +915,11 @@ object Streams {
                             checkpointLocation: String,
                             retainVersions: Int = 2)
                            (onRefresh: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(retainVersions >= 2,
-      s"retainVersions must be >= 2 (replay needs the prior version): $retainVersions")
-    events.writeStream.outputMode("append")
-      .option("checkpointLocation", checkpointLocation)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        cdcFullJoinViewBatch(batch, batchId, opCol, sideCol, viewDir,
-          retainVersions)(onRefresh)
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    ReplayPin.start(events, checkpointLocation, retainVersions) { (batch, batchId) =>
+      cdcFullJoinViewBatch(batch, batchId, opCol, sideCol, viewDir,
+        retainVersions)(onRefresh)
+    }
 
   /** One micro-batch of [[cdcFullJoinViewStream]] — factored out so
     * fault-injection tests drive the production path directly. */
@@ -1380,85 +932,34 @@ object Streams {
     require(IvmOverJoin.exists(spark, viewDir),
       s"no IvmOverJoin view at $viewDir — create it (spec + side " +
         "schemas) before starting the stream")
-    // fail LOUDLY on op/side values outside the contract — a quiet
-    // partial batch would leave the view silently wrong forever
-    // (NULL-safe: null op/side would make !isin NULL → silently dropped)
-    val bad = batch.filter(
-      !coalesce(col(opCol).isin("insert", "delete"), lit(false)) ||
-      !coalesce(col(sideCol).isin("fact", "dim"), lit(false))).count()
-    require(bad == 0,
-      s"$bad batch rows carry an op outside 'insert'/'delete' or a " +
-        "side outside 'fact'/'dim' — this view's CDC contract is " +
-        "two-sided insert/delete with before-images; nothing was applied")
-    val (fCols, dCols) = IvmOverJoin.sideCols(spark, viewDir)
-    def part(side: String, op: String, cols: Seq[String]): DataFrame =
-      batch.filter(col(sideCol) === side && col(opCol) === op)
-        .select(cols.map(col): _*)
-    val fi = part("fact", "insert", fCols)
-    val fd = part("fact", "delete", fCols)
-    val di = part("dim", "insert", dCols)
-    val dd = part("dim", "delete", dCols)
-    val (firstB, baseF, baseD) =
-      IvmOverJoin.readMarker(spark, viewDir, "STREAM") match {
-        case Some(s) =>
-          val p = s.split(" ")
-          (p(0).toLong, p(1).toInt, p(2).toInt)
-        case None =>
-          val (bf, bd, _) = IvmOverJoin.latestVersions(spark, viewDir)
-          IvmOverJoin.writeMarker(spark, viewDir, "STREAM",
-            s"$batchId $bf $bd")
-          (batchId, bf, bd)
-      }
-    require(batchId >= firstB,
-      s"batch id $batchId precedes this view's first stream batch " +
-        s"$firstB — the stream checkpoint was reset against an existing " +
-        "view; checkpoint and view are one unit of state (delete both " +
-        "or neither)")
-    val off = (batchId - firstB).toInt
-    val (expF, expD) = (baseF + off + 1, baseD + off + 1)
-    val (fv, dv, _) = IvmOverJoin.latestVersions(spark, viewDir)
-    def emit(): Unit = {
-      val rows = IvmOverJoin.groupsAt(spark, viewDir, expF, expD,
-        fi, fd, di, dd).persist()
-      rows.count()
-      try onRefresh(rows, batchId) finally rows.unpersist()
-    }
-    if (fv == expF && dv == expD) {
-      // replayed batch, both sides landed: heal whatever tail state
-      // the crash left (joined delta, inner view, or bookkeeping),
-      // then re-emit READ-ONLY against the pinned versions
-      IvmOverJoin.heal(spark, viewDir)
-      emit()
-    } else if (fv == expF - 1 && dv == expD - 1) {
-      // fresh batch; a leftover INFLIGHT with nothing of THIS batch
-      // landed is cleared by the same repair applyDelta would demand
-      if (IvmOverJoin.inflight(spark, viewDir) ||
-          IvmOverJoin.viewStale(spark, viewDir))
+    val Seq(fi, fd, di, dd) = twoSided(batch, opCol, sideCol,
+      IvmOverJoin.sideCols(spark, viewDir))
+    val b = ReplayPin.pin(spark, viewDir, batchId, counters = SideCounters)({
+      val (fv, dv, _) = IvmOverJoin.latestVersions(spark, viewDir)
+      Seq(fv, dv)
+    })(onRefresh)
+    b.landing match {
+      // heal whatever tail state the crash left (joined delta, inner
+      // view, or bookkeeping), then re-emit READ-ONLY
+      case _ if b.landed => IvmOverJoin.heal(spark, viewDir)
+      case Seq(ReplayPin.Fresh, ReplayPin.Fresh) =>
+        // a leftover INFLIGHT with nothing of THIS batch landed is
+        // cleared by the same repair applyDelta would demand
+        if (IvmOverJoin.inflight(spark, viewDir) ||
+            IvmOverJoin.viewStale(spark, viewDir))
+          IvmOverJoin.rebuild(spark, viewDir)
+        IvmOverJoin.applyDelta(spark, viewDir, fi, fd, di, dd)
+      case Seq(fact, dim) =>
+        // one side landed (either can be the one): rebuild restores a
+        // consistent joined state from whatever sides committed, then
+        // the resume fold applies ONLY the missing side
         IvmOverJoin.rebuild(spark, viewDir)
-      IvmOverJoin.applyDelta(spark, viewDir, fi, fd, di, dd)
-      emit()
-      IvmOverJoin.gc(spark, viewDir, retainVersions)
-    } else if ((fv == expF && dv == expD - 1) ||
-               (fv == expF - 1 && dv == expD)) {
-      // one side landed (the folds commit concurrently — either side
-      // can be the one): rebuild restores a consistent joined state
-      // from whatever sides committed, then the resume fold applies
-      // ONLY the missing side — the batch still consumes exactly one
-      // version per side, so the pairing stays arithmetic.
-      IvmOverJoin.rebuild(spark, viewDir)
-      IvmOverJoin.applyDeltaFolding(spark, viewDir, fi, fd, di, dd,
-        foldFact = fv == expF - 1, foldDim = dv == expD - 1)
-      emit()
-      IvmOverJoin.gc(spark, viewDir, retainVersions)
-    } else {
-      throw new IllegalStateException(
-        s"view at $viewDir is at side versions ($fv, $dv) but batch " +
-          s"$batchId expects ($expF, $expD) committed, " +
-          s"(${expF - 1}, ${expD - 1}) fresh, or one-sided " +
-          s"($expF, ${expD - 1}) / (${expF - 1}, $expD) interrupted: " +
-          "stream checkpoint and view state disagree — one was deleted " +
-          "or rolled back without the other")
+        IvmOverJoin.applyDeltaFolding(spark, viewDir, fi, fd, di, dd,
+          foldFact = fact == ReplayPin.Fresh, foldDim = dim == ReplayPin.Fresh)
     }
+    b.emit(IvmOverJoin.groupsAt(spark, viewDir, b.committed(0), b.committed(1),
+      fi, fd, di, dd))
+    if (!b.landed) IvmOverJoin.gc(spark, viewDir, retainVersions)
   }
 
   /** Run a streaming query to completion against the (finite) batch

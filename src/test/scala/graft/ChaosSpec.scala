@@ -422,7 +422,7 @@ class ChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     // crash AFTER the STREAM marker was pinned but BEFORE the bootstrap
     // build: redelivery of batch 0 must recover by building v1
-    IvfIndex.writeMarker(spark, idxDir, "STREAM", "0 0")
+    graft.operators.VersionedLayout.writeMarker(spark, idxDir, "STREAM", "0 0")
     val p0 = run(b0, 0L)
     assert(p0.nonEmpty)
     assert(IvfIndex.latestVersion(spark, idxDir) == 1)
@@ -560,7 +560,7 @@ class ChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     // crash AFTER the STREAM marker was pinned but BEFORE the bootstrap
     // build: redelivery of batch 0 must recover by building v1
-    TermIndex.writeMarker(spark, idxDir, "STREAM", "0 0")
+    graft.operators.VersionedLayout.writeMarker(spark, idxDir, "STREAM", "0 0")
     val p0 = run(b0, 0L)
     assert(p0.nonEmpty)
     assert(TermIndex.latestVersion(spark, idxDir) == 1)

@@ -436,7 +436,7 @@ class StreamingSpec extends AnyFunSuite {
     q.stop()
     // one version per micro-batch, pairing pinned at first contact
     assert(TermIndex.latestVersion(spark, idxDir) == nB)
-    assert(TermIndex.readMarker(spark, idxDir, "STREAM").contains("0 0"))
+    assert(graft.operators.VersionedLayout.readMarker(spark, idxDir, "STREAM").contains("0 0"))
     // THE streaming contract: batch i's emission == a read-only probe
     // of the version it committed — what a replay would re-emit
     (0 until nB).foreach { i =>
@@ -483,7 +483,7 @@ class StreamingSpec extends AnyFunSuite {
     q.stop()
     // one version per micro-batch, pairing pinned at first contact
     assert(IvfIndex.latestVersion(spark, idxDir) == nB)
-    assert(IvfIndex.readMarker(spark, idxDir, "STREAM").contains("0 0"))
+    assert(graft.operators.VersionedLayout.readMarker(spark, idxDir, "STREAM").contains("0 0"))
     // THE streaming contract: batch i's emission == a read-only probe
     // of the version it committed — what a replay would re-emit
     (0 until nB).foreach { i =>
